@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): times the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Each query is fully
@@ -9,44 +9,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate turns every explode into a redundant
-      // size(...)>0 filter that predicate pushdown then inlines BELOW
-      // the token-binding projections, re-evaluating the per-row
-      // shingle/span lambdas per element — measured 25× on the posting
-      // builders (8.5 s → 0.34 s at sf0.1). The filter only skips rows
-      // explode would drop anyway; excluding the rule is semantics-free.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Scan-parallelism floor (guide §6), round-17 corrected comment:
-      // maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-      // totalBytes/minPartitionNum)), so this floor only raises split
-      // counts once totalBytes/cpus exceeds openCostInBytes (4 MB) —
-      // ≥128 MB inputs at 32 cpus, exactly the scale where scan
-      // parallelism matters. At sf0.1 it splits only lineitem (11 MB,
-      // 3 splits vs 1); the round-17 A/B (floor=32 vs floor=1 on the
-      // nine r16 "mover" queries, best-of-3) measured every delta
-      // inside ±0.3 s noise, so the r16 idea of size-keying the floor
-      // has nothing to claw back. Scale-adaptive (derived from the
-      // worker count, not a tuned constant); kept stable per the r16
-      // verdict. Overridable for A/B (SPARK_GRAFT_MIN_SPLITS).
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     // optional subset for local A/B loops, e.g.
     // SPARK_GRAFT_BENCH_QUERIES=q24_minhash_near_dups,q19_ngram_sim_pairs
     val benchNames = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").toSeq.filter(SparkEntry.queries.contains))
+      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(SparkEntry.benchQueries)
+    SparkEntry.requireRegistered(benchNames)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession(cpus)
 
     // JVM/class-loading warmup: run every headline query once at the
     // smallest SF so timed runs measure steady-state execution (Spark
@@ -55,7 +25,7 @@ object Bench {
     benchNames.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // best-of-3 per query, attempts INTERLEAVED round-robin: the shared
@@ -78,7 +48,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         if (ok) {
           val t = (System.nanoTime() - t0) / 1e9
@@ -92,7 +62,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     // round-17: the stdout line now carries "cpus"/"runs" too — the
     // driver's scaling probe flagged suspect_cpus_ignored in round 16
-    // even though SPARK_GRAFT_CPUS is honored (master built above);
+    // even though SPARK_GRAFT_CPUS is honored (GraftSession(cpus) above);
     // self-describing output lets the artifact itself refute that.
     // Extra keys are harmless to JSON line parsers; the contract keys
     // (metric/value/unit/queries/sf) are unchanged.
@@ -109,7 +79,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fileJson + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     spark.stop()
   }

@@ -5,16 +5,14 @@ import graft.operators.TextAnalysis
 
 /** DuckDB oracle SQL — the driver runs each statement against the same
   * parquet tables (registered under their bare names) and hash-compares
-  * the result with the Spark query of the same key.
+  * the result with the Spark query it is paired with in
+  * `SparkEntry.registry`.
   *
   * Exactness rules used throughout (so hashes match bit-for-bit):
   *  - money/double aggregation goes through DECIMAL in BOTH engines;
   *  - synthesized emotion scores are exact multiples of 1/1024;
   *  - every LIMIT / row_number has a total-order tie-break;
   *  - column names and order are aligned with the Spark results.
-  *
-  * Queries with engine-specific hashing (xxhash64) or sequential
-  * semantics have no entry → the driver records a rows-only check.
   */
 object OracleSql {
 
@@ -23,7 +21,7 @@ object OracleSql {
   private val epLong   = Emotions.longSql("episodes", Seq("episode_id"))
   private val stLong   = Emotions.longSql("strains", Seq("strain_id"))
 
-  private val q01 =
+  private[graft] val q01 =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -37,13 +35,13 @@ object OracleSql {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  private val q02 =
+  private[graft] val q02 =
     s"""WITH strains AS ($strains)
        |SELECT strain_id, strain_name, happy, excited FROM (
        |  SELECT * FROM strains ORDER BY happy DESC, strain_id ASC LIMIT 100)
        |ORDER BY excited DESC, strain_id ASC LIMIT 5""".stripMargin
 
-  private val q03 =
+  private[graft] val q03 =
     """SELECT r_name,
       |  COUNT(*) AS n_customers,
       |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
@@ -52,18 +50,18 @@ object OracleSql {
       |JOIN region ON r_regionkey = n_regionkey
       |GROUP BY r_name ORDER BY r_name""".stripMargin
 
-  private val q04 =
+  private[graft] val q04 =
     """SELECT p_partkey, p_name FROM part
       |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
       |ORDER BY p_partkey""".stripMargin
 
-  private val q05 =
+  private[graft] val q05 =
     """SELECT c_custkey, c_name, c_mktsegment FROM customer
       |WHERE EXISTS (SELECT 1 FROM orders
       |              WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
       |ORDER BY c_custkey""".stripMargin
 
-  private val q06 =
+  private[graft] val q06 =
     """SELECT p_brand, CAST(rn AS INTEGER) AS rn, p_partkey, p_name, p_retailprice FROM (
       |  SELECT p_brand, p_partkey, p_name, p_retailprice,
       |    row_number() OVER (PARTITION BY p_brand
@@ -71,7 +69,7 @@ object OracleSql {
       |  FROM part)
       |WHERE rn <= 2 ORDER BY p_brand, rn""".stripMargin
 
-  private val q07 =
+  private[graft] val q07 =
     s"""WITH episodes AS ($episodes)
        |${Emotions.longSql("episodes", Seq("episode_id", "episode_name"))}
        |ORDER BY episode_id, emotion""".stripMargin
@@ -102,7 +100,7 @@ object OracleSql {
       |  JOIN ep_long e2 ON e2.emotion = p.emo2 AND e2.episode_id = p.episode_id)"""
       .stripMargin
 
-  private val q08 =
+  private[graft] val q08 =
     s"""WITH episodes AS ($episodes),
        |strains AS ($strains),
        |ep_long AS ($epLong),
@@ -120,7 +118,7 @@ object OracleSql {
     * per recursion step carrying the accumulated picks list — the SQL
     * twin of the driver fold. Assumes |strains| >= |episodes| (a pick
     * always exists), which holds for this data. */
-  private val q09 =
+  private[graft] val q09 =
     s"""WITH RECURSIVE episodes AS ($episodes),
        |strains AS ($strains),
        |ep_long AS ($epLong),
@@ -164,7 +162,7 @@ object OracleSql {
        |JOIN st_long s2 ON s2.strain_id = f.strain_id AND s2.emotion = f.emo2
        |ORDER BY f.episode_id""".stripMargin
 
-  private val q10 =
+  private[graft] val q10 =
     s"""WITH episodes AS ($episodes),
        |base AS (
        |  SELECT episode_id, episode_name,
@@ -182,20 +180,20 @@ object OracleSql {
        |    AS capitalized
        |FROM base ORDER BY episode_id""".stripMargin
 
-  private val q11 =
+  private[graft] val q11 =
     """SELECT type_word, COUNT(*) AS n_parts,
       |  COUNT(DISTINCT p_brand) AS n_brands
       |FROM (SELECT unnest(string_split(p_type, ' ')) AS type_word, p_brand
       |      FROM part)
       |GROUP BY type_word ORDER BY type_word""".stripMargin
 
-  private val q12 =
+  private[graft] val q12 =
     s"""WITH strains AS ($strains),
        |st_long AS ($stLong)
        |SELECT emotion, AVG(score) AS avg_score, COUNT(*) AS n
        |FROM st_long GROUP BY emotion ORDER BY emotion""".stripMargin
 
-  private val q13 =
+  private[graft] val q13 =
     """SELECT event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
       |  CAST(SUM(k) AS DOUBLE) / COUNT(*) AS avg_k,
@@ -205,7 +203,7 @@ object OracleSql {
       |      FROM events)
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  private val q14 =
+  private[graft] val q14 =
     """WITH marked AS (
       |  SELECT user_id, event_id, ts,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -226,14 +224,14 @@ object OracleSql {
       |  CAST(MAX(session_events) AS BIGINT) AS max_session_events
       |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  private val q15 =
+  private[graft] val q15 =
     """SELECT text AS dup_key, COUNT(*) AS dup_count, MIN(doc_id) AS keeper_id
       |FROM documents GROUP BY text ORDER BY keeper_id""".stripMargin
 
   private val enStop = TextAnalysis.stopwords("en")
     .map(w => s"'$w'").mkString("[", ", ", "]")
 
-  private val q16 =
+  private[graft] val q16 =
     s"""WITH ws AS (
        |  SELECT doc_id, text, string_split(lower(text), ' ') AS w FROM documents)
        |SELECT doc_id,
@@ -248,7 +246,7 @@ object OracleSql {
        |    ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+')) AS INTEGER) AS n_bpe_tokens
        |FROM ws ORDER BY doc_id""".stripMargin
 
-  private val q17 =
+  private[graft] val q17 =
     s"""WITH ws AS (
        |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
        |m AS (
@@ -270,7 +268,7 @@ object OracleSql {
   private def stopList(l: String) = TextAnalysis.stopwords(l)
     .map(w => s"'$w'").mkString("[", ", ", "]")
 
-  private val q18 = {
+  private[graft] val q18 = {
     val scoreCols = langs.map { l =>
       s"""CAST(len(list_filter(w, x -> list_contains(${stopList(l)}, x))) AS DOUBLE)
          |      / len(w) AS ${l}_score""".stripMargin
@@ -296,7 +294,7 @@ object OracleSql {
   /** Mirrors the Spark stop-shingle pruning exactly: shingles in > 50
     * docs are dropped from candidate generation AND from the common
     * count, while per-doc set sizes stay un-pruned. */
-  private val q19 =
+  private[graft] val q19 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
       |sh AS (
@@ -322,7 +320,7 @@ object OracleSql {
       |JOIN sizes sb ON sb.doc_id = b
       |ORDER BY jaccard DESC, a ASC, b ASC LIMIT 20""".stripMargin
 
-  private val q20 =
+  private[graft] val q20 =
     """SELECT doc_id,
       |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
       |  CAST(CASE WHEN length(text) = 0 THEN -1
@@ -337,13 +335,13 @@ object OracleSql {
       |WHERE octet_length(encode(text)) = length(text)
       |ORDER BY doc_id""".stripMargin
 
-  private val q21 =
+  private[graft] val q21 =
     """SELECT date_trunc('day', ts) AS day_start, event_type,
       |  COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY day_start, event_type""".stripMargin
 
-  private val q22 =
+  private[graft] val q22 =
     """WITH q AS (
       |  SELECT vec_id AS qid, embedding AS qv FROM embeddings
       |  WHERE vec_id % 20 = 0),
@@ -364,7 +362,7 @@ object OracleSql {
       |  FROM scored)
       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  private val q26 =
+  private[graft] val q26 =
     """SELECT doc_id,
       |  CAST(list_reduce(
       |    list_prepend(CAST(0 AS BIGINT),
@@ -373,7 +371,7 @@ object OracleSql {
       |    (acc, c) -> (acc * 31 + c) % 1048576) AS BIGINT) AS fingerprint
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  private val q28 =
+  private[graft] val q28 =
     s"""WITH scored AS (
        |${graft.functions.EmotionScore.scoreWideSql("documents", "doc_id", "text")})
        |SELECT * FROM scored ORDER BY doc_id""".stripMargin
@@ -382,7 +380,7 @@ object OracleSql {
     * into "episodes" (doc_id < 41) and "strains" (the rest), run the
     * reverse rank-match — the reference's whole cell-15 flow with real
     * text-derived vectors. */
-  private val q29 = {
+  private[graft] val q29 = {
     val scoredSql = graft.functions.EmotionScore
       .scoreWideSql("documents", "doc_id", "text")
     val emoCols = Emotions.names.mkString(", ")
@@ -402,7 +400,7 @@ object OracleSql {
   /** The oracle verifies the RESULT of the JSON round-trip (Spark
     * builds payloads with concat and parses with from_json); the same
     * rows derive directly from part columns. */
-  private val q30 =
+  private[graft] val q30 =
     """SELECT flavor, COUNT(*) AS n_strains,
       |  COUNT(DISTINCT race) AS n_races,
       |  MIN(strain_id) AS min_strain_id
@@ -413,7 +411,7 @@ object OracleSql {
 
   /** Salted two-phase aggregation is result-identical to plain GROUP BY
     * for algebraic aggregates — the oracle is the unsalted query. */
-  private val q31 =
+  private[graft] val q31 =
     """SELECT event_type,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
       |  COUNT(*) AS n
@@ -456,7 +454,7 @@ object OracleSql {
        |    / sqrt(list_aggregate(list_transform(range(1, len($b.embedding) + 1),
        |        i -> CAST($b.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)), 'sum'))""".stripMargin
 
-  private val q32 = {
+  private[graft] val q32 = {
     val bandSelects = (0 until lshBands).map { b =>
       s"SELECT vec_id, $b AS band, ${bandBucketSql(b)} AS bucket FROM embeddings"
     }.mkString("\nUNION ALL\n")
@@ -481,7 +479,7 @@ object OracleSql {
        |           ELSE regexp_replace($nameCol, ':', '', 'g') END,
        |      ',', '', 'g'), '\\s+', '_', 'g')""".stripMargin
 
-  private val q33 =
+  private[graft] val q33 =
     s"""WITH g9 AS ($q09),
        |episodes AS ($episodes),
        |strains AS ($strains)
@@ -493,7 +491,7 @@ object OracleSql {
        |JOIN strains s USING (strain_id)
        |WHERE t.rn = 10""".stripMargin
 
-  private val q34 =
+  private[graft] val q34 =
     s"""WITH g8 AS ($q08)
        |SELECT strain_id, strain_name, episode_id, episode_name,
        |  ${urlSql("episode_name", "episode_id")} AS url
@@ -505,7 +503,7 @@ object OracleSql {
     * binary double/float sits exactly on a decimal rounding boundary),
     * decimal sums exact in any order. Spark's posexplode pos is
     * 0-based; generate_subscripts-style range here is 1-based → -1. */
-  private val q35 =
+  private[graft] val q35 =
     """SELECT label, CAST(i - 1 AS INTEGER) AS pos,
       |  CAST(SUM(CAST(CAST(v AS DOUBLE) AS DECIMAL(18,9))) AS DOUBLE)
       |    / COUNT(*) AS avg_value,
@@ -518,7 +516,7 @@ object OracleSql {
   /** session_window(ts, gap): start = first event ts of the session,
     * end = last event ts + gap. Derived via the lag/sum session-id
     * assignment. */
-  private val q36 =
+  private[graft] val q36 =
     """WITH marked AS (
       |  SELECT user_id, event_id, ts,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -537,7 +535,7 @@ object OracleSql {
       |FROM sessioned GROUP BY user_id, session_id
       |ORDER BY user_id, session_start""".stripMargin
 
-  private val q37 =
+  private[graft] val q37 =
     """SELECT doc_id,
       |  CAST(i AS INTEGER) AS frame_idx,
       |  CAST(i * 64 AS INTEGER) AS byte_offset,
@@ -548,7 +546,7 @@ object OracleSql {
       |  AND i < length(text) // 64
       |ORDER BY doc_id, frame_idx""".stripMargin
 
-  private val q38 =
+  private[graft] val q38 =
     """WITH errors AS (
       |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
       |purchases AS (
@@ -559,7 +557,7 @@ object OracleSql {
       |  ON e.user_id = p.user_id AND e.ts >= p.ts
       |ORDER BY e.event_id""".stripMargin
 
-  private val q39 =
+  private[graft] val q39 =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
       |  COUNT(*) AS n
@@ -567,7 +565,7 @@ object OracleSql {
       |GROUP BY ROLLUP (l_returnflag, l_linestatus)
       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
 
-  private val q40 =
+  private[graft] val q40 =
     """SELECT o_orderkey, o_custkey,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
       |    PARTITION BY o_custkey
@@ -575,7 +573,7 @@ object OracleSql {
       |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_revenue
       |FROM orders ORDER BY o_orderkey""".stripMargin
 
-  private val q41 =
+  private[graft] val q41 =
     """SELECT event_type,
       |  quantile_cont(value, 0.5) AS p50,
       |  quantile_cont(value, 0.9) AS p90,
@@ -583,18 +581,18 @@ object OracleSql {
       |  COUNT(*) AS n
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  private val q42 =
+  private[graft] val q42 =
     """SELECT regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS dup_key,
       |  COUNT(*) AS dup_count, MIN(doc_id) AS keeper_id
       |FROM documents GROUP BY 1 ORDER BY keeper_id""".stripMargin
 
-  private val q43 =
+  private[graft] val q43 =
     """SELECT CAST(hour(ts) AS INTEGER) AS hour_of_day,
       |  COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1 ORDER BY hour_of_day""".stripMargin
 
-  private val q44 =
+  private[graft] val q44 =
     s"""WITH strains AS ($strains),
        |st AS (SELECT strain_id, strain_name FROM strains)
        |SELECT a.strain_id AS a_id, a.strain_name AS a_name,
@@ -604,7 +602,7 @@ object OracleSql {
        |WHERE levenshtein(a.strain_name, b.strain_name) <= 4
        |ORDER BY a_id, b_id""".stripMargin
 
-  private val q45 =
+  private[graft] val q45 =
     """SELECT source,
       |  COUNT(*) FILTER (WHERE lang = 'de') AS de,
       |  COUNT(*) FILTER (WHERE lang = 'en') AS en,
@@ -615,7 +613,7 @@ object OracleSql {
 
   /** Connected components via recursive label walk: every node's
     * cluster is the min id reachable through the symmetric edge set. */
-  private val q47 =
+  private[graft] val q47 =
     s"""WITH RECURSIVE pairs AS ($q32),
        |sym AS (
        |  SELECT a AS src, b AS dst FROM pairs
@@ -627,7 +625,7 @@ object OracleSql {
        |SELECT node AS doc_id, MIN(label) AS cluster_id
        |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin
 
-  private val q48 =
+  private[graft] val q48 =
     """SELECT e.event_type, CAST(length(e.event_type) AS INTEGER) AS type_weight,
       |  COUNT(*) AS n,
       |  CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
@@ -639,7 +637,7 @@ object OracleSql {
     * the exact distinct counts and the VERDICT of the in-query verify
     * (hll_ok must come out true — estimate within 10% = 5σ at
     * rsd=0.02). */
-  private val q49 =
+  private[graft] val q49 =
     """SELECT l_returnflag,
       |  COUNT(DISTINCT l_partkey) AS exact_parts,
       |  COUNT(*) AS n_rows,
@@ -649,7 +647,7 @@ object OracleSql {
 
   /** The oracle is the plain theta join — same rows as the bucketed
     * equi-join implementation. */
-  private val q50 =
+  private[graft] val q50 =
     """WITH bands AS (
       |  SELECT i AS band_id, i * 50000.0 AS lo, (i + 1) * 50000.0 AS hi
       |  FROM range(0, 12) t(i))
@@ -660,7 +658,7 @@ object OracleSql {
       |  ON o_totalprice >= lo AND o_totalprice < hi
       |GROUP BY band_id, lo, hi ORDER BY band_id""".stripMargin
 
-  private val q51 =
+  private[graft] val q51 =
     """SELECT event_type,
       |  CAST(MIN(k) AS INTEGER) AS min_k,
       |  CAST(MAX(k) AS INTEGER) AS max_k,
@@ -671,7 +669,7 @@ object OracleSql {
       |      FROM events)
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  private val q52 =
+  private[graft] val q52 =
     s"""WITH ws AS (
        |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
        |m AS (
@@ -691,7 +689,7 @@ object OracleSql {
        |    AND stop_hits >= 1 AND diversity >= 0.1 AS keep
        |FROM m ORDER BY doc_id""".stripMargin
 
-  private val q53 =
+  private[graft] val q53 =
     """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
       |FROM orders
@@ -699,7 +697,7 @@ object OracleSql {
       |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
       .stripMargin
 
-  private val q54 =
+  private[graft] val q54 =
     """SELECT doc_id, lang, source, CAST(sample_rank AS INTEGER) AS sample_rank
       |FROM (
       |  SELECT doc_id, lang, source,
@@ -709,14 +707,14 @@ object OracleSql {
       |  FROM documents)
       |WHERE sample_rank <= 5 ORDER BY doc_id""".stripMargin
 
-  private val q55 =
+  private[graft] val q55 =
     """SELECT event_id,
       |  CAST(len(regexp_extract_all(props, '[0-9]{2,}')) AS INTEGER)
       |    AS n_redacted,
       |  regexp_replace(props, '[0-9]{2,}', '<NUM>', 'g') AS redacted
       |FROM events ORDER BY event_id""".stripMargin
 
-  private val q56 =
+  private[graft] val q56 =
     """WITH terms AS (
       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
       |  FROM documents),
@@ -736,7 +734,7 @@ object OracleSql {
       |FROM scored WHERE term_rank <= 3
       |ORDER BY doc_id, term_rank""".stripMargin
 
-  private val q57 =
+  private[graft] val q57 =
     """SELECT doc_id, source, n_chars,
       |  CAST(SUM(n_chars) OVER w - n_chars AS BIGINT) AS tokens_before,
       |  CAST(FLOOR((SUM(n_chars) OVER w - n_chars) / 10000) AS BIGINT)
@@ -746,7 +744,7 @@ object OracleSql {
       |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY doc_id""".stripMargin
 
-  private val q58 =
+  private[graft] val q58 =
     s"""WITH ws AS (
        |  SELECT doc_id, text, string_split(lower(text), ' ') AS w
        |  FROM documents),
@@ -771,17 +769,17 @@ object OracleSql {
        |SELECT doc_id, dup_count, quality FROM ranked WHERE rn = 1
        |ORDER BY doc_id""".stripMargin
 
-  private val q59 =
+  private[graft] val q59 =
     """SELECT c_mktsegment, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       |FROM events JOIN customer ON user_id = c_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  private val q60 =
+  private[graft] val q60 =
     """SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_users
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  private val q61 =
+  private[graft] val q61 =
     """SELECT n_name,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
       |  CAST(RANK() OVER (
@@ -793,7 +791,7 @@ object OracleSql {
       |GROUP BY n_name
       |ORDER BY rnk""".stripMargin
 
-  private val q27 =
+  private[graft] val q27 =
     """SELECT s_suppkey, s_name, s_nationkey,
       |  CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 2 AS DOUBLE) AS s_acctbal
       |FROM supplier WHERE s_nationkey < 10
@@ -808,7 +806,7 @@ object OracleSql {
     * checks the EXACT interpolated percentiles (quantile_cont ⇄ Spark
     * percentile, the q41 identity) and the verdict of the in-query
     * rank-error verify (ok25..ok99 must come out true). */
-  private val q62 =
+  private[graft] val q62 =
     """SELECT l_returnflag, COUNT(*) AS n,
       |  quantile_cont(l_extendedprice, 0.25) AS p25,
       |  quantile_cont(l_extendedprice, 0.50) AS p50,
@@ -818,7 +816,7 @@ object OracleSql {
       |FROM lineitem GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  private val q63 =
+  private[graft] val q63 =
     s"""WITH strains AS ($strains)
        |SELECT strain_id, strain_name FROM strains
        |ORDER BY strain_id""".stripMargin
@@ -826,7 +824,7 @@ object OracleSql {
   /** Catalog introspection is engine metadata, so the oracle is the
     * expected constant: the three registered views and their parquet
     * schemas (Spark simpleString type names). */
-  private val q64 =
+  private[graft] val q64 =
     """SELECT * FROM (VALUES
       |  ('cat_nation', 'n_name', 'string'),
       |  ('cat_nation', 'n_nationkey', 'int'),
@@ -843,7 +841,7 @@ object OracleSql {
   /** The map-explode result derives directly from part: keys are
     * 'p<partkey>', races p_brand, flavor counts the p_type word count;
     * counter ids by key order (binary collation in both engines). */
-  private val q65 =
+  private[graft] val q65 =
     """WITH e AS (
       |  SELECT 'p' || CAST(p_partkey AS VARCHAR) AS strain_key,
       |         p_brand AS race,
@@ -856,7 +854,7 @@ object OracleSql {
   /** Identical HTML render + regexp paragraph extraction + Python
     * slices ([3:] and [4:9]) in DuckDB — the oracle exercises the
     * extraction semantics, not just a round-trip. */
-  private val q66 =
+  private[graft] val q66 =
     """SELECT doc_id,
       |  CAST(len(ps) AS INT) AS n_paragraphs,
       |  substr(array_to_string(ps[4:], ' '), 1, 200) AS body_from3,
@@ -877,7 +875,7 @@ object OracleSql {
 
   /** The DSv2 source's payloads are deterministic functions of the
     * key, so the oracle derives the same aggregate from range(). */
-  private val q67 =
+  private[graft] val q67 =
     """SELECT 'R' || CAST(num % 5 AS VARCHAR) AS race,
       |  COUNT(*) AS n,
       |  CAST(SUM(num % 3 + 1) AS BIGINT) AS total_flavors
@@ -886,7 +884,7 @@ object OracleSql {
 
   /** The streaming interval join's append output equals the batch
     * interval join (watermark + time-bound join → exactly-once emit). */
-  private val q68 =
+  private[graft] val q68 =
     """WITH e AS (
       |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
       |p AS (
@@ -901,7 +899,7 @@ object OracleSql {
   // q71: Gopher repetition signals — gram building mirrors the Spark
   // transform/sequence construction (1-based w[i], space-joined), and
   // the top-fraction is CAST(max AS DOUBLE)/sum like the Spark side
-  private val q71 =
+  private[graft] val q71 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
       |g AS (
@@ -927,7 +925,7 @@ object OracleSql {
   // q72: mixture sampling — the scramble mirrors q54's keyed hash and
   // the keep-rate arithmetic (min via LEAST, double division, the
   // rate·(2^31-1) threshold) matches the Spark side op-for-op
-  private val q72 =
+  private[graft] val q72 =
     """WITH d AS (
       |  SELECT doc_id, source,
       |    len(string_split(lower(text), ' ')) AS n_words
@@ -943,7 +941,7 @@ object OracleSql {
 
   // q73: sliding-window chunking — w[a:b] is 1-based inclusive, so
   // [k*16+1 : k*16+32] is DuckDB's spelling of slice(toks, k*16+1, 32)
-  private val q73 =
+  private[graft] val q73 =
     """WITH d AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS toks
       |  FROM documents),
@@ -959,7 +957,7 @@ object OracleSql {
 
   // q74: SCD-2 intervals — lead() over (key; ts, seq) mirrors the
   // Spark window exactly; timestamps compare exactly (same parquet)
-  private val q74 =
+  private[graft] val q74 =
     """WITH p AS (
       |  SELECT event_id, user_id, ts FROM events
       |  WHERE event_type = 'purchase')
@@ -975,7 +973,7 @@ object OracleSql {
 
   // q75: winsorization — quantile_cont == Spark's exact percentile
   // (same linear interpolation, pinned by q41); LEAST/GREATEST mirror
-  private val q75 =
+  private[graft] val q75 =
     """WITH b AS (
       |  SELECT event_type,
       |    quantile_cont(value, 0.05) AS band_lo,
@@ -988,7 +986,7 @@ object OracleSql {
 
   // q76: z-score — moments from exact DECIMAL(18,6) sums (the q48
   // convention), then one fixed double-operation order on both sides
-  private val q76 =
+  private[graft] val q76 =
     """WITH s AS (
       |  SELECT event_type, count(*) AS n_grp,
       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s1,
@@ -1003,7 +1001,7 @@ object OracleSql {
 
   // q77: incremental-batch dedup — near-dup side mirrors q19's shingle
   // and hot-prune conventions, restricted to (corpus a < 400 <= batch b)
-  private val q77 =
+  private[graft] val q77 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
       |sh AS (
@@ -1042,7 +1040,7 @@ object OracleSql {
 
   // q78: stratified split — scramble order (q54 convention) + integer
   // cut arithmetic (rn·100 ≤ cnt·pct), no float thresholds
-  private val q78 =
+  private[graft] val q78 =
     """WITH r AS (
       |  SELECT doc_id, lang,
       |    row_number() OVER (PARTITION BY lang
@@ -1061,7 +1059,7 @@ object OracleSql {
   // (fixed-width shuffle key; collision bound documented in Dedup).
   // Slice toks[pos : pos+7] is 1-based INCLUSIVE, mirroring Spark's
   // slice(toks, pos, 8).
-  private val q79 =
+  private[graft] val q79 =
     """WITH d AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS toks
       |  FROM documents),
@@ -1089,7 +1087,7 @@ object OracleSql {
   // DECIMAL(18,9) before the (exact, order-independent) sum; the mean
   // is ONE double division at the end, mirroring the Spark op order.
   // The 1e-9 grid absorbs JVM-vs-DuckDB ln() last-ulp noise.
-  private val q80 =
+  private[graft] val q80 =
     """WITH t AS (
       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
       |  FROM documents),
@@ -1111,7 +1109,7 @@ object OracleSql {
   // earliest step event is strictly after their step-(k-1) time. All
   // comparisons at microsecond precision (epoch_us) to mirror Spark's
   // NANOS→micros read truncation; ONE double division for the rate.
-  private val q81 =
+  private[graft] val q81 =
     """WITH e AS (
       |  SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
       |s1 AS (SELECT user_id, min(t) AS t FROM e
@@ -1136,7 +1134,7 @@ object OracleSql {
 
   // q82: weekly cohort retention. week_offset mirrors Spark's
   // floor(datediff/7.0) double op order exactly.
-  private val q82 =
+  private[graft] val q82 =
     """WITH f AS (
       |  SELECT user_id, min(ts) AS first_ts FROM events GROUP BY user_id)
       |SELECT CAST(date_trunc('week', f.first_ts) AS TIMESTAMP)
@@ -1150,7 +1148,7 @@ object OracleSql {
 
   // q83: vocabulary coverage cut — keep predicate is pure integer math
   // ((cum−cnt)·10 < total·9) so the boundary token is engine-exact.
-  private val q83 =
+  private[graft] val q83 =
     """WITH t AS (
       |  SELECT unnest(string_split(lower(text), ' ')) AS tok
       |  FROM documents),
@@ -1172,7 +1170,7 @@ object OracleSql {
   // op order (bit-identical across engines); the order-sensitive Σerr²
   // goes through the DECIMAL(28,15) quantization grid (exact sum), then
   // ONE double division.
-  private val q84 =
+  private[graft] val q84 =
     """WITH base AS (
       |  SELECT vec_id,
       |    list_aggregate(list_transform(embedding,
@@ -1201,7 +1199,7 @@ object OracleSql {
   // q85: BM25 with the log-free idf (N−df+0.5)/(df+0.5) — monotone in
   // df like the ln form, but engine-exact (house rule, see q56). Score
   // written in the exact Spark op order; double literals via CAST.
-  private val q85 =
+  private[graft] val q85 =
     """WITH toks AS (
       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
       |  FROM documents),
@@ -1238,7 +1236,7 @@ object OracleSql {
   // q86: cross-source 5-gram overlap matrix. Spark joins on xxhash64
   // of the shingle; the oracle joins raw shingle text (same accepted
   // collision rounding as q79). 5-gram assembly mirrors q69's kernel.
-  private val q86 =
+  private[graft] val q86 =
     """WITH ws AS (
       |  SELECT source, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -1266,7 +1264,7 @@ object OracleSql {
 
   // q87: corpus-order 5-gram novelty — first corpus occurrence =
   // min(doc_id) over documents containing the shingle.
-  private val q87 =
+  private[graft] val q87 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -1288,7 +1286,7 @@ object OracleSql {
 
   // q88: ANALYZE-style column profile — the oracle builds the same
   // long form with UNION ALL; sums through DECIMAL(18,2) (house rule).
-  private val q88 =
+  private[graft] val q88 =
     """WITH p AS (
       |  SELECT 'l_quantity' AS col_name, l_quantity AS v FROM lineitem
       |  UNION ALL
@@ -1305,7 +1303,7 @@ object OracleSql {
   // q89: equi-depth histogram from exact interpolated decile
   // boundaries (quantile_cont == Spark percentile, q41-verified);
   // bin = 1 + Σ (v > boundary), strict > so ties land low both sides.
-  private val q89 =
+  private[graft] val q89 =
     """WITH b AS (
       |  SELECT quantile_cont(l_extendedprice, 0.1) AS b1,
       |         quantile_cont(l_extendedprice, 0.2) AS b2,
@@ -1334,7 +1332,7 @@ object OracleSql {
   // q90: funnel conversion latency — q81's step chain, then one
   // aggregation over integer-microsecond latencies (percentile ≡
   // quantile_cont, the q41-verified equivalence).
-  private val q90 =
+  private[graft] val q90 =
     """WITH e AS (
       |  SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
       |s1 AS (SELECT user_id, min(t) AS t FROM e
@@ -1354,7 +1352,7 @@ object OracleSql {
       |  max(lat_us) AS max_us
       |FROM lat""".stripMargin
 
-  private val q69 =
+  private[graft] val q69 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
       |sh AS (
@@ -1378,7 +1376,7 @@ object OracleSql {
   // mirroring slice(toks, a, 16); list(... ORDER BY block_id) FILTER
   // restores original order over surviving blocks, COALESCE('') for
   // all-boilerplate documents (Spark concat_ws of an empty array).
-  private val q91 =
+  private[graft] val q91 =
     """WITH d AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS toks
       |  FROM documents),
@@ -1406,7 +1404,7 @@ object OracleSql {
   // cosineSql kernel (same left-to-right double op order as the native
   // expression, q32-pinned); max/count over identically-computed sims;
   // -2.0 sentinel for vectors with no earlier cluster-mate.
-  private val q92 =
+  private[graft] val q92 =
     s"""WITH p AS (
        |  SELECT y.vec_id AS b, ${cosineSql("x", "y")} AS sim
        |  FROM embeddings x JOIN embeddings y
@@ -1427,7 +1425,7 @@ object OracleSql {
   // DECIMAL(18,9) on BOTH sides before ranking (pow() is not
   // bit-specified across libms; the 1e-9 grid absorbs last-ulp noise,
   // grid ties break by doc_id).
-  private val q93 =
+  private[graft] val q93 =
     """WITH d AS (
       |  SELECT doc_id, source, n_chars,
       |    CAST(pow(
@@ -1443,7 +1441,7 @@ object OracleSql {
   // q94: global contiguous ids — the oracle IS the one-partition
   // window the Spark side refuses to run; (source, doc_id) is a
   // unique total order, so both spellings agree exactly.
-  private val q94 =
+  private[graft] val q94 =
     """SELECT doc_id, source,
       |  row_number() OVER (ORDER BY source, doc_id) AS global_id
       |FROM documents ORDER BY doc_id""".stripMargin
@@ -1452,7 +1450,7 @@ object OracleSql {
   // candidates + exact verify; with threshold cnt·29 > N the sketch
   // guarantees zero false negatives, so the answer IS the plain
   // GROUP BY / HAVING heavy-hitter set.
-  private val q95 =
+  private[graft] val q95 =
     """WITH w AS (
       |  SELECT unnest(string_split(lower(text), ' ')) AS word
       |  FROM documents),
@@ -1466,7 +1464,7 @@ object OracleSql {
     * ops — generated by the same (i, dim) loop as
     * `ZOrder.interleaveBits`, so oracle and engine share the bit
     * placement by construction (bit i of dim k → position i·ndims+k). */
-  private val q101 = {
+  private[graft] val q101 = {
     val dims = Seq(
       "(o_custkey % 256)",
       "least(255, greatest(0, CAST(floor(o_totalprice / 2500.0) AS BIGINT)))")
@@ -1488,7 +1486,7 @@ object OracleSql {
     * contrib = (rank·w) // out_w summed per dst,
     * rank' = (15·r0 + 85·Σ) // 100, r0 = 1e9 // |V|. All-bigint, so
     * partial-sum order is irrelevant and every bit matches. */
-  private val q102 = {
+  private[graft] val q102 = {
     val scale = 1000000000L
     val its = (1 to 5).map { t =>
       s"""it$t AS (
@@ -1522,7 +1520,7 @@ object OracleSql {
   /** q103: the CMS estimate is engine-specific; the oracle checks the
     * exact top-20 counts (deterministic tie-break) and the verdict of
     * the in-query bound check. */
-  private val q103 =
+  private[graft] val q103 =
     """WITH w AS (
       |  SELECT unnest(string_split(lower(text), ' ')) AS word
       |  FROM documents)
@@ -1532,14 +1530,14 @@ object OracleSql {
 
   /** q104: the bucketed layout changes the PLAN (no exchange), never
     * the answer — the oracle is the plain join/agg. */
-  private val q104 =
+  private[graft] val q104 =
     """SELECT c_mktsegment, COUNT(*) AS n_orders,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
   /** q105: one row per expectation with its violation count. */
-  private val q105 =
+  private[graft] val q105 =
     """WITH checks AS (
       |  SELECT 'o_orderkey_not_null' AS "check",
       |    COUNT(*) FILTER (WHERE o_orderkey IS NULL) AS violations FROM orders
@@ -1567,7 +1565,7 @@ object OracleSql {
       |FROM checks ORDER BY "check"""".stripMargin
 
   /** q106: last-writer-wins CDC fold as a window + anti-join. */
-  private val q106 =
+  private[graft] val q106 =
     """WITH ch AS (
       |  SELECT o_custkey AS c_custkey, o_orderkey AS seq,
       |    CASE o_orderstatus WHEN 'P' THEN 'D' WHEN 'O' THEN 'I'
@@ -1588,7 +1586,7 @@ object OracleSql {
 
   /** q107: triangles of the undirected nation trade graph — counted
     * once each via the u<v<w edge-triple join. */
-  private val q107 =
+  private[graft] val q107 =
     """WITH e0 AS (
       |  SELECT s_nationkey AS src, c_nationkey AS dst
       |  FROM lineitem
@@ -1607,7 +1605,7 @@ object OracleSql {
     * engine's native expression was verified bit-exact against it, so
     * the raw double survives the hash compare. The first-char block
     * mirrors the Spark side exactly. */
-  private val q108 =
+  private[graft] val q108 =
     s"""WITH strains AS ($strains),
        |st AS (SELECT strain_id, strain_name FROM strains)
        |SELECT a.strain_id AS a_id, a.strain_name AS a_name,
@@ -1622,7 +1620,7 @@ object OracleSql {
   /** q109: BFS levels from nation 0 over each nation's top-3 trade
     * routes, replayed as a recursive CTE (UNION dedups (node, dist)
     * pairs, so the walk terminates; MIN picks the first-reach hop). */
-  private val q109 =
+  private[graft] val q109 =
     """WITH RECURSIVE edges AS (
       |  SELECT s_nationkey AS src, c_nationkey AS dst, COUNT(*) AS w
       |  FROM lineitem
@@ -1646,7 +1644,7 @@ object OracleSql {
       |FROM walk GROUP BY node ORDER BY nationkey""".stripMargin
 
   /** q110: month date-spine gap fill over sampled customers. */
-  private val q110 =
+  private[graft] val q110 =
     """WITH f AS (SELECT * FROM orders WHERE o_custkey % 100 = 0),
       |obs AS (
       |  SELECT o_custkey, date_trunc('month', o_orderdate) AS month,
@@ -1670,7 +1668,7 @@ object OracleSql {
   /** q111: trailing 24 h mean purchase value per user — RANGE frame on
     * the microsecond epoch axis (epoch_us ⇄ unix_micros), decimal-exact
     * sum ÷ count. */
-  private val q111 =
+  private[graft] val q111 =
     """SELECT event_id, user_id,
       |  COUNT(*) OVER w AS win_n,
       |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE)
@@ -1682,7 +1680,7 @@ object OracleSql {
 
   /** q112: Simpson (collision) token diversity — integer ratio, one
     * correctly-rounded double division at the end. */
-  private val q112 =
+  private[graft] val q112 =
     """WITH tok AS (
       |  SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok
       |  FROM documents),
@@ -1695,7 +1693,7 @@ object OracleSql {
       |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** q113: top-5 word trigrams per language, ties lexicographic. */
-  private val q113 =
+  private[graft] val q113 =
     """WITH w AS (
       |  SELECT lang, string_split(lower(text), ' ') AS ws FROM documents),
       |tri AS (
@@ -1714,7 +1712,7 @@ object OracleSql {
 
   /** q114: explicit GROUPING SETS with grouping_id tag (DuckDB's
     * GROUPING(a,b) bit order matches Spark's grouping_id). */
-  private val q114 =
+  private[graft] val q114 =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,
       |  COUNT(*) AS n,
@@ -1725,7 +1723,7 @@ object OracleSql {
       .stripMargin
 
   /** q115: per-type deciles under a total order (value, id). */
-  private val q115 =
+  private[graft] val q115 =
     """WITH d AS (
       |  SELECT event_type,
       |    CAST(ntile(10) OVER (PARTITION BY event_type
@@ -1738,7 +1736,7 @@ object OracleSql {
 
   /** q116: snapshot diff — supplier vs a simulated next-day version;
     * the full-outer-join delta with null-safe column compare. */
-  private val q116 =
+  private[graft] val q116 =
     """WITH a AS (
       |  SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier),
       |b AS (
@@ -1771,7 +1769,7 @@ object OracleSql {
 
   /** q117: MAD robust outliers — exact lower medians (rank (n+1)//2
     * under (value, id)), never interpolated, so bit-exact. */
-  private val q117 =
+  private[graft] val q117 =
     """WITH v AS (SELECT event_id, event_type, value FROM events),
       |r1 AS (
       |  SELECT *,
@@ -1799,7 +1797,7 @@ object OracleSql {
   /** q118: exact-phrase hits — the oracle counts aligned token windows
     * directly (list slice), the engine answers through the positional
     * inverted index; same semantics, different plan. */
-  private val q118 =
+  private[graft] val q118 =
     """WITH w AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents)
       |SELECT doc_id, COUNT(*) AS n_hits
@@ -1811,7 +1809,7 @@ object OracleSql {
   /** q119: concurrent sessions — the oracle replays the q36 session
     * windows then does the quadratic overlap self-join the bucketed
     * interval join replaces. */
-  private val q119 =
+  private[graft] val q119 =
     """WITH marked AS (
       |  SELECT user_id, event_id, ts,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1835,7 +1833,7 @@ object OracleSql {
 
   /** q120: skyline — quadratic NOT EXISTS domination check; the engine
     * answers with the sort-based linear frontier. */
-  private val q120 =
+  private[graft] val q120 =
     """WITH p AS (SELECT p_partkey, p_retailprice, p_size FROM part)
       |SELECT p_partkey, p_retailprice, p_size FROM p a
       |WHERE NOT EXISTS (
@@ -1848,13 +1846,13 @@ object OracleSql {
   /** q121: incremental aggregate maintenance — the oracle is the
     * DIRECT group-by over the whole table; decimal-exact merge means
     * incremental must equal it bit-for-bit. */
-  private val q121 =
+  private[graft] val q121 =
     """SELECT o_custkey, COUNT(*) AS n_orders,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q122: FK orphan counts (one dimension deliberately broken). */
-  private val q122 =
+  private[graft] val q122 =
     """SELECT 'lineitem->orders' AS relationship, COUNT(*) AS n_orphans
       |FROM lineitem l
       |WHERE NOT EXISTS (SELECT 1 FROM orders o
@@ -1873,7 +1871,7 @@ object OracleSql {
       |ORDER BY relationship""".stripMargin
 
   /** q123: top-20 co-purchased part pairs by shared-order count. */
-  private val q123 =
+  private[graft] val q123 =
     """WITH lp AS (
       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
       |SELECT a.pk AS a, b.pk AS b, COUNT(*) AS n_orders
@@ -1884,7 +1882,7 @@ object OracleSql {
 
   /** q124: rolling 7-day actives — the oracle uses the day-range join
     * the engine's explode-fan-out form replaces. */
-  private val q124 =
+  private[graft] val q124 =
     """WITH du AS (
       |  SELECT DISTINCT date_trunc('day', ts) AS day, user_id
       |  FROM events),
@@ -1900,7 +1898,7 @@ object OracleSql {
       |ORDER BY day""".stripMargin
 
   /** q125: most common 3-step event-type paths per user order. */
-  private val q125 =
+  private[graft] val q125 =
     """WITH seq AS (
       |  SELECT event_type AS e1,
       |    lead(event_type, 1) OVER w AS e2,
@@ -1916,7 +1914,7 @@ object OracleSql {
   /** q126: anti-entropy repair plan — the oracle is the FULL key-level
     * diff (q116 family) plus the bucket id; matching it proves the
     * engine's bucket-fingerprint pruning dropped nothing. */
-  private val q126 =
+  private[graft] val q126 =
     """WITH a AS (SELECT s_suppkey, s_acctbal FROM supplier),
       |b AS (
       |  SELECT s_suppkey,
@@ -1941,7 +1939,7 @@ object OracleSql {
   /** q127: sliding 1 h / 15 min windows — every event contributes to
     * exactly 4 epoch-aligned windows; the oracle fans out via
     * UNNEST(range(0,4)). */
-  private val q127 =
+  private[graft] val q127 =
     """WITH fan AS (
       |  SELECT event_type, value,
       |    make_timestamp(CAST((FLOOR(epoch(ts) / 900) - k) * 900000000 AS BIGINT))
@@ -1955,7 +1953,7 @@ object OracleSql {
 
   /** q128: JSONL round-trip — the oracle reads the ORIGINAL table, so
     * the written-and-reread lines must be lossless. */
-  private val q128 =
+  private[graft] val q128 =
     """SELECT doc_id, text, lang, source,
       |  CAST(length(text) AS INT) AS text_len
       |FROM documents ORDER BY doc_id""".stripMargin
@@ -1963,7 +1961,7 @@ object OracleSql {
   /** q132: portable-hash MinHash-LSH — the full sketch pipeline
     * (polynomial shingle hash, 8 affine permutations, 2×4 bands,
     * exact-Jaccard verify at θ=0.5) replayed in SQL bit-for-bit. */
-  private val q132 = {
+  private[graft] val q132 = {
     val as = Seq(131, 137, 139, 149, 151, 157, 163, 167)
     val bs = Seq(17, 29, 47, 71, 89, 107, 131, 151)
     val mins = as.zip(bs).zipWithIndex.map { case ((a, b), j) =>
@@ -2008,7 +2006,7 @@ object OracleSql {
   /** q133: portable-hash SimHash — 32-bit count-weighted fingerprints,
     * Manku 4×8-bit chunk join, exact Hamming verify; bit-for-bit SQL
     * replay (the q132 convention). */
-  private val q133 =
+  private[graft] val q133 =
     """WITH w0 AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
       |toks AS (
       |  SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS tok,
@@ -2070,7 +2068,7 @@ object OracleSql {
       |ORDER BY a, b""".stripMargin
 
   /** q134: RFM quartiles under total order (metric, custkey). */
-  private val q134 =
+  private[graft] val q134 =
     """WITH rfm AS (
       |  SELECT o_custkey, MAX(o_orderdate) AS recency,
       |    COUNT(*) AS frequency,
@@ -2086,7 +2084,7 @@ object OracleSql {
       |FROM rfm ORDER BY o_custkey""".stripMargin
 
   /** q135: last-touch attribution via ASOF join, 7-day lookback. */
-  private val q135 =
+  private[graft] val q135 =
     """WITH touches AS (
       |  SELECT user_id, ts, MAX(event_type) AS touch_type
       |  FROM events WHERE event_type IN ('view', 'click', 'signup')
@@ -2106,7 +2104,7 @@ object OracleSql {
       |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q136: grouped exact percentiles (quantile_cont twin). */
-  private val q136 =
+  private[graft] val q136 =
     """SELECT c_mktsegment,
       |  quantile_cont(o_totalprice, 0.5) AS p50,
       |  quantile_cont(o_totalprice, 0.9) AS p90,
@@ -2116,7 +2114,7 @@ object OracleSql {
 
   /** q137: association rules (support/confidence/lift from exact
     * integer counts; one correctly-rounded division each). */
-  private val q137 =
+  private[graft] val q137 =
     """WITH lp AS (
       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
       |n AS (SELECT COUNT(DISTINCT ok) AS n_orders FROM lp),
@@ -2136,7 +2134,7 @@ object OracleSql {
       |LIMIT 20""".stripMargin
 
   /** q138: right-to-erasure cascade audit (FK walk counts). */
-  private val q138 =
+  private[graft] val q138 =
     """SELECT 'customer' AS table_name,
       |  (SELECT COUNT(*) FROM customer) AS n_before,
       |  (SELECT COUNT(*) FROM customer WHERE c_custkey % 37 = 0) AS n_removed,
@@ -2167,11 +2165,11 @@ object OracleSql {
       |ORDER BY table_name""".stripMargin
 
   /** q139: DSv2 sink round-trip — oracle reads the original table. */
-  private val q139 =
+  private[graft] val q139 =
     """SELECT s_suppkey AS k, s_name AS v FROM supplier ORDER BY k"""
 
   /** q140: ship-latency percentiles per priority (exact ints). */
-  private val q140 =
+  private[graft] val q140 =
     """SELECT o_orderpriority, COUNT(*) AS n,
       |  quantile_cont(datediff('day', o_orderdate, l_shipdate), 0.5) AS p50,
       |  quantile_cont(datediff('day', o_orderdate, l_shipdate), 0.9) AS p90,
@@ -2180,7 +2178,7 @@ object OracleSql {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q141: LTV cohort triangle (first-order-month x months-since). */
-  private val q141 =
+  private[graft] val q141 =
     """WITH o AS (
       |  SELECT o_custkey, o_totalprice,
       |         date_trunc('month', o_orderdate) AS month
@@ -2195,7 +2193,7 @@ object OracleSql {
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   /** q142: daily bounce rate over 30-min-gap session windows. */
-  private val q142 =
+  private[graft] val q142 =
     """WITH marked AS (
       |  SELECT user_id, event_id, ts,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -2221,7 +2219,7 @@ object OracleSql {
       |FROM sess GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q143: trade-graph degree/reciprocity profile. */
-  private val q143 =
+  private[graft] val q143 =
     """WITH e AS (
       |  SELECT s_nationkey AS src, c_nationkey AS dst, COUNT(*) AS w
       |  FROM lineitem
@@ -2248,7 +2246,7 @@ object OracleSql {
       |ORDER BY nationkey""".stripMargin
 
   /** q144: ABC / Pareto classes from decimal-exact cumulative shares. */
-  private val q144 =
+  private[graft] val q144 =
     """WITH rev AS (
       |  SELECT l_partkey AS p_partkey,
       |         SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS revenue
@@ -2270,7 +2268,7 @@ object OracleSql {
       |FROM c ORDER BY p_partkey""".stripMargin
 
   /** q145: supplier-market HHI from exact integer cents. */
-  private val q145 =
+  private[graft] val q145 =
     """WITH rev AS (
       |  SELECT s_nationkey, s_suppkey,
       |    CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))) AS BIGINT)
@@ -2285,7 +2283,7 @@ object OracleSql {
       |FROM rev GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q146: monthly order-priority mix (exact count shares). */
-  private val q146 =
+  private[graft] val q146 =
     """WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS month,
       |         o_orderpriority, COUNT(*) AS n
@@ -2301,7 +2299,7 @@ object OracleSql {
     * sets, no rarity cap, no limit) — deliberately not
     * prefix-filtered, so equality with Spark's PPJoin-style prefix
     * path proves the filter lossless on real data. */
-  private val q147 =
+  private[graft] val q147 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -2328,14 +2326,14 @@ object OracleSql {
 
   /** q148: identical ordered left-fold — list_reduce inits with the
     * first element exactly like Spark's aggregate(slice(2..), x1). */
-  private val q148 =
+  private[graft] val q148 =
     """SELECT user_id, CAST(count(*) AS INTEGER) AS n_events,
       |  list_reduce(list(value ORDER BY epoch_us(ts), event_id),
       |    (acc, x) -> acc * 0.75 + x * 0.25) AS ewma
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
   /** q149: grouped mode, lexicographic tie-break. */
-  private val q149 =
+  private[graft] val q149 =
     """WITH c AS (
       |  SELECT user_id, event_type, count(*) AS n_modal
       |  FROM events GROUP BY 1, 2),
@@ -2350,7 +2348,7 @@ object OracleSql {
   /** q150: OLS from exact integer moment sums; only the final
     * slope/intercept combination is double, in the same expression
     * order as the Spark side. */
-  private val q150 =
+  private[graft] val q150 =
     """WITH pts AS (
       |  SELECT s_nationkey,
       |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -2377,7 +2375,7 @@ object OracleSql {
   /** q151: per-user day spine + linear interpolation; the lerp is the
     * identical double expression as the Spark side over decimal-exact
     * daily sums. */
-  private val q151 =
+  private[graft] val q151 =
     """WITH daily AS (
       |  SELECT user_id, date_trunc('day', ts) AS day,
       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -2415,7 +2413,7 @@ object OracleSql {
 
   /** q152: stupid-backoff bigram scores; lnp9 decimal quantization
     * before the per-doc sum (q80's convention). */
-  private val q152 =
+  private[graft] val q152 =
     """WITH base AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -2452,7 +2450,7 @@ object OracleSql {
 
   /** q153: PSI over 10 equal-width reference bins, Laplace-smoothed
     * shares, lnp9-quantized terms. */
-  private val q153 =
+  private[graft] val q153 =
     """WITH ref AS (
       |  SELECT value FROM events WHERE ts < TIMESTAMP '2024-01-16'),
       |cur AS (
@@ -2492,7 +2490,7 @@ object OracleSql {
 
   /** q154: per-source unigram KL vs the corpus mixture; support(s) ⊆
     * support(corpus) so every term is finite without smoothing. */
-  private val q154 =
+  private[graft] val q154 =
     """WITH toks AS (
       |  SELECT source, unnest(string_split(lower(text), ' ')) AS tok
       |  FROM documents),
@@ -2520,7 +2518,7 @@ object OracleSql {
 
   /** q155: session Markov transitions — q14's sessionization, lead()
     * within (user, session), exact count-ratio probabilities. */
-  private val q155 =
+  private[graft] val q155 =
     """WITH marked AS (
       |  SELECT user_id, event_id, ts, event_type,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -2553,7 +2551,7 @@ object OracleSql {
   /** q156: Kaplan-Meier product-limit curve; running sum of
     * DECIMAL(18,9)-quantized ln(1−d/n) factors (lnp9 as a cumulative
     * window), survival re-exponentiated and quantized to 6 dp. */
-  private val q156 =
+  private[graft] val q156 =
     """WITH su AS (
       |  SELECT user_id, min(ts) AS s_ts FROM events
       |  WHERE event_type = 'signup' GROUP BY 1),
@@ -2598,7 +2596,7 @@ object OracleSql {
 
   /** q157: ECDF over exact-cent keys; cumulative window on the
     * distinct-value axis, one double division per distinct value. */
-  private val q157 =
+  private[graft] val q157 =
     """WITH v AS (
       |  SELECT c_custkey, c_nationkey,
       |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -2617,7 +2615,7 @@ object OracleSql {
 
   /** q158: revenue-weighted median balance — integer cumulative-weight
     * crossing, lower-median convention. */
-  private val q158 =
+  private[graft] val q158 =
     """WITH w AS (
       |  SELECT l_suppkey,
       |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100
@@ -2647,7 +2645,7 @@ object OracleSql {
 
   /** q159: reproducible ε-DP counts — portable-PRF uniforms, Laplace
     * inversion, lnp9 quantization (seed 20240813, ε = 1). */
-  private val q159 =
+  private[graft] val q159 =
     """WITH c AS (
       |  SELECT c_nationkey, count(*) AS n FROM customer GROUP BY 1),
       |h AS (
@@ -2672,7 +2670,7 @@ object OracleSql {
     * not prefix-filtered, so equality with Spark's one-sided-prefix
     * path proves that filter lossless (the q147 convention, with
     * a ≠ b instead of a < b and |a| as the denominator). */
-  private val q160 =
+  private[graft] val q160 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -2697,7 +2695,7 @@ object OracleSql {
       |FROM v WHERE common * 5 >= sza * 4
       |ORDER BY a, b""".stripMargin
 
-  private val q161 =
+  private[graft] val q161 =
     """SELECT c_nationkey, c_mktsegment,
       |  CAST(floor(c_acctbal / 1000) AS BIGINT) AS acct_kband,
       |  count(*) AS class_size,
@@ -2706,7 +2704,7 @@ object OracleSql {
       |GROUP BY 1, 2, 3
       |ORDER BY 1, 2, 3""".stripMargin
 
-  private val q162 =
+  private[graft] val q162 =
     """WITH h AS (
       |  SELECT doc_id,
       |    list_sort(list_intersect(
@@ -2720,7 +2718,7 @@ object OracleSql {
 
   /** q163: q22's brute-force cosine scorer with the hard-negative
     * label inequality; identical left-to-right double accumulation. */
-  private val q163 =
+  private[graft] val q163 =
     """WITH q AS (
       |  SELECT vec_id AS qid, embedding AS qv, label AS ql
       |  FROM embeddings WHERE vec_id % 20 = 0),
@@ -2745,7 +2743,7 @@ object OracleSql {
       |  FROM scored)
       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  private val q164 =
+  private[graft] val q164 =
     """WITH r AS (
       |  SELECT doc_id, source,
       |    CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id)
@@ -2758,7 +2756,7 @@ object OracleSql {
   /** q165: NDCG@10 — identical ordered left-fold over (rank, rel)
     * structs, log2 spelled ln/ln (the q148/q22 accumulation
     * conventions). */
-  private val q165 =
+  private[graft] val q165 =
     """WITH e AS (
       |  SELECT user_id, event_id, value,
       |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS rel
@@ -2794,7 +2792,7 @@ object OracleSql {
 
   /** q166: grouped Mann–Whitney AUC — the doubled-rank tie average
     * keeps every sum integer; one double division at the end. */
-  private val q166 =
+  private[graft] val q166 =
     """WITH o AS (
       |  SELECT o_orderpriority, o_totalprice AS s,
       |    (o_orderstatus = 'F') AS lbl FROM orders),
@@ -2818,7 +2816,7 @@ object OracleSql {
 
   /** q167: calibration bins — decimal-exact score sums, confidence by
     * linearity from the exact mean (no normalized double is summed). */
-  private val q167 =
+  private[graft] val q167 =
     """WITH st AS (
       |  SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx
       |  FROM orders),
@@ -2845,7 +2843,7 @@ object OracleSql {
   /** q168: the join-delta oracle is full(∪)⋈full(∪) EXCEPT ALL
     * base⋈base — the identity Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB checked
     * from the definition, not by mirroring the three terms. */
-  private val q168 =
+  private[graft] val q168 =
     """WITH a0 AS (
       |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 7 <> 0),
       |da AS (
@@ -2868,7 +2866,7 @@ object OracleSql {
       |  SELECT * FROM full_j EXCEPT ALL SELECT * FROM base_j)
       |ORDER BY o_orderkey, l_linenumber""".stripMargin
 
-  private val q169 =
+  private[graft] val q169 =
     """SELECT c_nationkey, c_mktsegment,
       |  count(*) AS class_size,
       |  CAST(count(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT))
@@ -2881,7 +2879,7 @@ object OracleSql {
 
   /** q170: quantile normalization — integer rank matching onto the
     * pooled order (// is bigint division; no float positions). */
-  private val q170 =
+  private[graft] val q170 =
     """WITH t AS (
       |  SELECT event_id, event_type, value FROM events),
       |ranked AS (
@@ -2904,7 +2902,7 @@ object OracleSql {
       |    ELSE 1 + nn // 2 END
       |ORDER BY event_id""".stripMargin
 
-  private val q171 =
+  private[graft] val q171 =
     """WITH c AS (
       |  SELECT doc_id,
       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -2921,7 +2919,7 @@ object OracleSql {
 
   /** q172: max-cosine decontamination — q22's accumulation shape,
     * grouped max over the small eval set. */
-  private val q172 =
+  private[graft] val q172 =
     """WITH q AS (
       |  SELECT vec_id AS qid, embedding AS qv FROM embeddings
       |  WHERE vec_id % 50 = 0),
@@ -2943,7 +2941,7 @@ object OracleSql {
   /** q173: the composed pipeline replayed as CTE stages — keeper
     * election restricted to quality-passing docs (stage order), the
     * packing scan only over kept docs. */
-  private val q173 =
+  private[graft] val q173 =
     """WITH base AS (
       |  SELECT doc_id, lower(text) AS nt,
       |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
@@ -2975,7 +2973,7 @@ object OracleSql {
 
   /** q174: Benford audit — digit from the integer-string (log10-free),
     * shares and chi-square terms lnp9-quantized. */
-  private val q174 =
+  private[graft] val q174 =
     """WITH c AS (
       |  SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
       |      AS VARCHAR), 1, 1) AS INTEGER) AS digit,
@@ -3008,7 +3006,7 @@ object OracleSql {
     * the same Scala PRF the Spark plan uses, bucket = signed-projection
     * sign bits, ranking by integer dot product. Bit-for-bit replay of
     * `Similarity.lshPortableTopK` — buckets, candidates, AND ranks. */
-  private val q175 = {
+  private[graft] val q175 = {
     val dims = 64; val nPlanes = 8
     val signRows = (0 until nPlanes).map { p =>
       val lst = (0 until dims)
@@ -3051,7 +3049,7 @@ object OracleSql {
   /** q285: multi-probe LSH replay — q175's bucket chain with the
     * query side expanded to its own bucket plus the nPlanes
     * Hamming-1 flips (xor with each plane weight). */
-  private val q285 = {
+  private[graft] val q285 = {
     val dims = 64; val nPlanes = 8
     val signRows = (0 until nPlanes).map { p =>
       val lst = (0 until dims)
@@ -3107,7 +3105,7 @@ object OracleSql {
     * (division in double; sums < 2^53, so the floor is engine-exact).
     * Init = the 4 lowest vec_ids in id order, exactly the Spark seed.
     * Search probes the 2 nearest lists and ranks by integer dot. */
-  private val q176 = {
+  private[graft] val q176 = {
     val dims = 64; val k = 4
     def assignCte(cent: String, out: String): String =
       s"""d_$out AS (
@@ -3217,7 +3215,7 @@ object OracleSql {
       |  WHERE word <> '' GROUP BY word),
       |v0 AS (SELECT word, freq, string_split(word, '') AS syms FROM w)""".stripMargin
 
-  private val q129 =
+  private[graft] val q129 =
     s"""WITH $bpeVocabCte,
        |${bpeRoundCtes(5)}
        |SELECT rank, "left", "right", n FROM (
@@ -3226,7 +3224,7 @@ object OracleSql {
        |  UNION ALL SELECT * FROM m5)
        |ORDER BY rank""".stripMargin
 
-  private val q131 =
+  private[graft] val q131 =
     s"""WITH $bpeVocabCte,
        |${bpeRoundCtes(5)},
        |dwf AS (
@@ -3251,7 +3249,7 @@ object OracleSql {
     * native SQLite scan decodes every table (q177: counts, integer
     * sums incl. rowid aliases, text lengths, quantized REAL sums) and
     * row-level content (q178: all 41 episode rows) correctly. */
-  private val q177 =
+  private[graft] val q177 =
     """SELECT tbl, CAST(n_rows AS BIGINT) AS n_rows,
       |  CAST(id_sum AS BIGINT) AS id_sum,
       |  CAST(text_len AS BIGINT) AS text_len,
@@ -3273,7 +3271,7 @@ object OracleSql {
       |) t(tbl, n_rows, id_sum, text_len, real_q)
       |ORDER BY tbl""".stripMargin
 
-  private val q178 =
+  private[graft] val q178 =
     """SELECT CAST(episode_id AS BIGINT) AS episode_id, episode_name,
       |  CAST(happy_q AS BIGINT) AS happy_q,
       |  CAST(excited_q AS BIGINT) AS excited_q
@@ -3326,7 +3324,7 @@ object OracleSql {
     * synthesis from (doc_id, source), same regex field extraction,
     * list filter/sort of query params, and reassembly. Patterns kept
     * RE2-simple so Java regex and DuckDB RE2 agree. */
-  private val q179 =
+  private[graft] val q179 =
     """WITH u AS (
       |  SELECT doc_id,
       |    (CASE WHEN doc_id % 3 = 0 THEN 'https' ELSE 'http' END) || '://' ||
@@ -3363,7 +3361,7 @@ object OracleSql {
 
   /** q180: PRF pseudonym replay — the same two affine bijections mod
     * 1e9+7 as Privacy.pseudonym, token left-padded to 10 digits. */
-  private val q180 =
+  private[graft] val q180 =
     """WITH c AS (
       |  SELECT c_custkey AS ck,
       |    'user_' || lpad(CAST(
@@ -3378,7 +3376,7 @@ object OracleSql {
   /** q181: hashed linear scorer replay — the polynomial char fold mod
     * 1e9+7, bucket %64, PRF weight in [-8, 8], per-doc integer sum.
     * All integer, so the logit is exact in any engine. */
-  private val q181 =
+  private[graft] val q181 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -3403,7 +3401,7 @@ object OracleSql {
     * intersection per query. The cosine folds are left-associative in
     * both engines, so the float sims (and therefore the rank sets)
     * are bit-identical. */
-  private val q182 = {
+  private[graft] val q182 = {
     def cosTop(dims: String, out: String): String =
       s"""${out}_s AS (
          |  SELECT q.vec_id AS qid, c.vec_id AS cid,
@@ -3436,7 +3434,7 @@ object OracleSql {
     * replace-all), counts via regexp_extract_all on the exact text
     * each pass scanned. Patterns are RE2-simple so Java and RE2
     * match identical spans. */
-  private val q183 =
+  private[graft] val q183 =
     """WITH u AS (
       |  SELECT doc_id, text ||
       |    (CASE WHEN doc_id % 3 = 0 THEN ' mail user' ||
@@ -3472,7 +3470,7 @@ object OracleSql {
     * and Spark's floor(int/int-as-double) agree on the -1 edge, and
     * greatest(…, 0) keeps empty docs at exactly one empty chunk in
     * both engines. */
-  private val q184 =
+  private[graft] val q184 =
     """WITH d AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -3494,7 +3492,7 @@ object OracleSql {
     * ranks brevity; row_number over each total order, then the pure
     * integer 10¹² // (60 + rank) fusion. CAST ranks to INTEGER
     * (Spark int) and the fused sum to BIGINT (DuckDB // → HUGEINT). */
-  private val q185 =
+  private[graft] val q185 =
     """WITH t AS (
       |  SELECT doc_id, n_chars,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -3524,7 +3522,7 @@ object OracleSql {
     * ownership by row_number over (doc_id, para_id) per raw paragraph
     * text (the engine elects over xxhash64; grouping raw text here
     * also proves the hash collision-free at this SF). */
-  private val q186 =
+  private[graft] val q186 =
     """WITH d AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS toks
       |  FROM documents),
@@ -3552,7 +3550,7 @@ object OracleSql {
   /** q187: DSIR replay — q181's char-fold bucket per token, one
     * grouped count for (raw, target), the Laplace integer ratio, and
     * a per-doc sum. Everything BIGINT; `//` outputs re-cast. */
-  private val q187 =
+  private[graft] val q187 =
     """WITH t AS (
       |  SELECT doc_id, source,
       |    unnest(list_filter(string_split(lower(text), ' '),
@@ -3581,7 +3579,7 @@ object OracleSql {
   // q97: transformWithState per-(user, type) snapshot — all maintained
   // aggregates are order-independent, so the batch GROUP BY is exact
   // whatever the stream's arrival/trigger decomposition was.
-  private val q97 =
+  private[graft] val q97 =
     """SELECT user_id, event_type,
       |  count(*) AS n_events,
       |  min(event_id) AS min_event_id,
@@ -3593,7 +3591,7 @@ object OracleSql {
   // exact verify on the Spark side; cnt·25 > per-source total sits on
   // the per-group no-false-negative line, so plain grouped
   // GROUP BY / HAVING is the exact answer.
-  private val q98 =
+  private[graft] val q98 =
     """WITH w AS (
       |  SELECT source, unnest(string_split(lower(text), ' ')) AS word
       |  FROM documents),
@@ -3606,7 +3604,7 @@ object OracleSql {
 
   // q99: Bloom-pruned semi join — the sketch admits no false
   // negatives, so the pruned plan returns exactly the plain semi join.
-  private val q99 =
+  private[graft] val q99 =
     """SELECT c_custkey FROM customer
       |WHERE c_custkey IN
       |  (SELECT user_id FROM events WHERE event_type = 'click')
@@ -3618,7 +3616,7 @@ object OracleSql {
   // convention). DuckDB positions are 1-based where Spark's are
   // 0-based; both schemes are internally consistent so the kept token
   // sequences agree.
-  private val q100 =
+  private[graft] val q100 =
     """WITH d AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS toks
       |  FROM documents),
@@ -3691,14 +3689,14 @@ object OracleSql {
       |    END AS rec_ppm,
       |  CAST(2000000 * tp // (scanned + p_all) AS BIGINT) AS f1_ppm
       |FROM c, p""".stripMargin
-  private val q188 = prCurveBody + "\nORDER BY thr DESC"
-  private val q208 = prCurveBody + "\nORDER BY f1_ppm DESC, thr DESC LIMIT 1"
+  private[graft] val q188 = prCurveBody + "\nORDER BY thr DESC"
+  private[graft] val q208 = prCurveBody + "\nORDER BY f1_ppm DESC, thr DESC LIMIT 1"
 
   /** q189: Cohen's kappa replay — integer confusion-cell arithmetic;
     * the fixed point divides MAGNITUDES only so DuckDB's floor //
     * agrees with Spark's truncating DIV on the (possibly negative)
     * numerator. */
-  private val q189 =
+  private[graft] val q189 =
     """WITH r AS (
       |  SELECT
       |    CASE WHEN n_chars < 250 THEN 'short'
@@ -3734,7 +3732,7 @@ object OracleSql {
   /** q190: α-sampling replay — exact isqrt (float seed ±1-corrected in
     * integer comparisons), largest-remainder apportionment over the
     * bounded per-source frame, scramble-order application (q78's key). */
-  private val q190 =
+  private[graft] val q190 =
     """WITH c AS (
       |  SELECT source, CAST(count(*) AS BIGINT) AS n_rows
       |  FROM documents GROUP BY 1),
@@ -3780,7 +3778,7 @@ object OracleSql {
     * Σc² over the distinct-token list, truncating `//` for ttr_ppm
     * (BIGINT // BIGINT is integer division in DuckDB), and the
     * low_diversity cut is an integer comparison. */
-  private val q191 =
+  private[graft] val q191 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -3808,7 +3806,7 @@ object OracleSql {
 
   /** q192: split-leakage replay — q147's exhaustive lossless pair join
     * composed with q78's split assignment; cross-split pairs only. */
-  private val q192 =
+  private[graft] val q192 =
     """WITH ws AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w
       |  FROM documents),
@@ -3857,7 +3855,7 @@ object OracleSql {
   /** q193: zone-map replay — file_id off a row_number over the unique
     * layout key (Spark's globalRowIds total order), grouped min/max
     * zone stats, both layouts unioned. */
-  private val q193 = {
+  private[graft] val q193 = {
     def audit(keyExpr: String, tag: String): String =
       s"""SELECT '$tag' AS layout,
          |  CAST((row_number() OVER (ORDER BY $keyExpr ASC) - 1) // 500
@@ -3879,7 +3877,7 @@ object OracleSql {
 
   /** q194: stratified k-fold replay — q78's scramble order, fold =
     * (rn − 1) mod 5. */
-  private val q194 =
+  private[graft] val q194 =
     """SELECT doc_id, lang,
       |  CAST((row_number() OVER (PARTITION BY lang
       |    ORDER BY (doc_id % 2147483647) * 2654435761 % 2147483647 ASC,
@@ -3891,7 +3889,7 @@ object OracleSql {
     * CTEs in the same 10⁶/10¹² integer fixed point (the q102/q176
     * unrolled-iteration pattern); both engines clamp denominators to
     * ≥ 1 and floor-divide non-negative operands. */
-  private val q195 =
+  private[graft] val q195 =
     """WITH rev AS (
       |  SELECT c.c_nationkey AS nk,
       |    date_trunc('month', o.o_orderdate) AS m,
@@ -3947,7 +3945,7 @@ object OracleSql {
     * hash-missed at both (18,9) and (18,6) — double→DECIMAL cast
     * semantics, not an ln ulp). HUGEINT staging; `//` truncates
     * toward zero exactly like Spark's DIV. */
-  private val q196 =
+  private[graft] val q196 =
     """WITH base AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS w
@@ -3973,7 +3971,7 @@ object OracleSql {
 
   /** q197: hapax / Good–Turing unseen-mass replay — exact integer
     * counts, ppm floor division. */
-  private val q197 =
+  private[graft] val q197 =
     """WITH u AS (
       |  SELECT source AS grp,
       |    unnest(list_filter(string_split(lower(text), ' '),
@@ -3995,7 +3993,7 @@ object OracleSql {
   /** q198: Markov next-event eval replay — lead() transitions in
     * (epoch_us, id) order, argmax model on train users (uid % 5 ≠ 0),
     * exact-integer accuracy on the holdout. */
-  private val q198 =
+  private[graft] val q198 =
     """WITH e AS (
       |  SELECT user_id, event_type,
       |    lead(event_type) OVER (PARTITION BY user_id
@@ -4061,7 +4059,7 @@ object OracleSql {
        |${round("l1", "l2")}""".stripMargin
   }
 
-  private val q199 =
+  private[graft] val q199 =
     s"""WITH $lpaCtes
        |SELECT node AS nationkey, label AS community
        |FROM l2 ORDER BY nationkey""".stripMargin
@@ -4069,7 +4067,7 @@ object OracleSql {
   /** q200: Poisson-bootstrap replay — the Privacy-PRF uniform with
     * the replicate folded into the key, the identical Poisson(1)
     * inverse-CDF double-literal ladder, decimal-exact weighted sums. */
-  private val q200 =
+  private[graft] val q200 =
     """WITH rep AS (
       |  SELECT o_orderkey AS id,
       |    CAST(o_totalprice AS DECIMAL(18,2)) AS x,
@@ -4112,7 +4110,7 @@ object OracleSql {
     * hash-missed in the driver's oracle env despite local bit-equality
     * — a decimal-from-double cast difference — so the double path is
     * gone entirely. */
-  private val q201 =
+  private[graft] val q201 =
     """WITH d AS (
       |  SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS x,
       |    o_orderpriority = '1-URGENT' AS arm
@@ -4167,7 +4165,7 @@ object OracleSql {
   /** q202: content-defined chunking replay — q181's char-fold token
     * hashes, the 4-token rolling fold mod 1e9+7, boundaries at 0 mod
     * 8, list-slice chunk extraction. */
-  private val q202 =
+  private[graft] val q202 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -4209,7 +4207,7 @@ object OracleSql {
   /** q203: reciprocal-NN replay — the q182 float-cosine convention
     * (left-associative fold, bit-identical sims) restricted to the
     * eval subset on BOTH sides, top-1 per vector, mutual join. */
-  private val q203 =
+  private[graft] val q203 =
     """WITH s AS (
       |  SELECT q.vec_id AS qid, c.vec_id AS cid,
       |    list_aggregate(list_transform(range(1, 65),
@@ -4234,7 +4232,7 @@ object OracleSql {
 
   /** q204: vocab-growth replay — first-occurrence histogram, then the
     * cumulative window (CAST BIGINT — the q102 HUGEINT lesson). */
-  private val q204 =
+  private[graft] val q204 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -4256,7 +4254,7 @@ object OracleSql {
 
   /** q205: burstiness replay — exact integer VMR; numerator ≥ 0 by
     * Cauchy–Schwarz so // matches Spark's DIV. */
-  private val q205 =
+  private[graft] val q205 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -4279,7 +4277,7 @@ object OracleSql {
 
   /** q206: trending-token replay — integer midpoint split, one-pass
     * half-tagged counts, smoothed integer odds. */
-  private val q206 =
+  private[graft] val q206 =
     """WITH ids AS (
       |  SELECT CAST((min(doc_id) + max(doc_id)) // 2 AS BIGINT) AS mid
       |  FROM documents),
@@ -4305,7 +4303,7 @@ object OracleSql {
 
   /** q207: kNN-outlier replay — the q203 float-cosine CTE, rank-5 row
     * per query, threshold flag on the bit-replayed sim. */
-  private val q207 =
+  private[graft] val q207 =
     """WITH s AS (
       |  SELECT q.vec_id AS qid, c.vec_id AS cid,
       |    list_aggregate(list_transform(range(1, 65),
@@ -4329,7 +4327,7 @@ object OracleSql {
     * text where Spark groups its xxhash64 (the q186 collision
     * convention); the paragraph stage is q186's CTE body over the
     * stage-1 survivors; each report row is a scalar aggregate. */
-  private val q209 =
+  private[graft] val q209 =
     """WITH base AS (
       |  SELECT doc_id, text AS t,
       |    CAST(len(list_filter(string_split(lower(text), ' '),
@@ -4381,7 +4379,7 @@ object OracleSql {
     * engine API, see COVERAGE.md). Same per-doc 4-gram kernel as
     * q211, then one integer aggregation by source; dup4_ppm is
     * mass-weighted (Σdup // Σgrams on BIGINTs). */
-  private val q96n =
+  private[graft] val q96n =
     """WITH t AS (
       |  SELECT doc_id, source, strlen(text) AS n_bytes,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -4416,7 +4414,7 @@ object OracleSql {
   /** q211: compressibility-proxy replay — duplicate-4-gram mass
     * (strlen = UTF-8 bytes in both engines; list slice [i:i+3] is the
     * q113 n-gram pattern; ppm floor division on non-negatives). */
-  private val q211 =
+  private[graft] val q211 =
     """WITH t AS (
       |  SELECT doc_id, strlen(text) AS n_bytes,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
@@ -4441,7 +4439,7 @@ object OracleSql {
     * pair construction as a CTE, the q47 recursive min-label walk for
     * components, the q188 integer-logit fragment for quality, then one
     * window rank per cluster (logit DESC, doc_id ASC). */
-  private val q212 =
+  private[graft] val q212 =
     s"""WITH RECURSIVE pr AS ($q132),
        |sym AS (
        |  SELECT a AS src, b AS dst FROM pr
@@ -4477,7 +4475,7 @@ object OracleSql {
   /** q213: benchmark-decontamination replay — distinct 8-gram posting
     * lists (the q132 slicing pattern), benchmark side = doc_id % 97,
     * self-matches excluded, ppm floor division on non-negatives. */
-  private val q213 =
+  private[graft] val q213 =
     """WITH b AS (
       |  SELECT doc_id, doc_id % 97 = 0 AS is_bench,
       |    string_split(lower(text), ' ') AS ws
@@ -4517,7 +4515,7 @@ object OracleSql {
     * nearest-neighbor index t·dim//4 for the 4×4 resize, integer
     * 77/150/29 luma with //256). A hash match proves the codec
     * round-trip recovered every pixel byte-exactly. */
-  private val q214 =
+  private[graft] val q214 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    8 + doc_id % 9 AS w,
@@ -4557,7 +4555,7 @@ object OracleSql {
     * exactly v since (77+150+29)v >> 8 = v), everything else the
     * standard rgb formula regardless of container (BMP, truecolor
     * PNG, or paletted PNG — the PLTE indirection is lossless). */
-  private val q241 =
+  private[graft] val q241 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    8 + doc_id % 9 AS w,
@@ -4607,7 +4605,7 @@ object OracleSql {
     * RIFF PCM bytes and decodes them back; the oracle computes the
     * identical integer stats from the formula, with LAG over the
     * sample index for the strict sign-flip zero-crossings. */
-  private val q215 =
+  private[graft] val q215 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    64 + doc_id % 65 AS n,
@@ -4645,7 +4643,7 @@ object OracleSql {
     * into real GIF89a bytes and decodes one row per frame; the
     * oracle computes identical per-frame channel sums from the
     * formula over (frame, x, y) coordinate ranges. */
-  private val q216 =
+  private[graft] val q216 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    6 + doc_id % 6 AS w,
@@ -4677,7 +4675,7 @@ object OracleSql {
   /** q217: framed-energy replay — frames of 16 samples at hop 8 over
     * the q215 waveform formula; energy = Σs², active iff
     * mean-square > 333000 (energy > 333000·16, integer compare). */
-  private val q217 =
+  private[graft] val q217 =
     """WITH ids AS (
       |  SELECT doc_id, 64 + doc_id % 65 AS n FROM documents),
       |fr AS (
@@ -4704,7 +4702,7 @@ object OracleSql {
     * linearly interpolated to 10 kHz with the same div/mod
     * arithmetic (DuckDB // and Scala / both truncate toward zero, so
     * negative samples replay bit-exactly). */
-  private val q296 =
+  private[graft] val q296 =
     """WITH ids AS (
       |  SELECT doc_id, 64 + doc_id % 65 AS n,
       |    8000 + (doc_id % 5) * 1000 AS rate
@@ -4770,7 +4768,7 @@ object OracleSql {
       |      AS dhash_lo
       |  FROM bits GROUP BY doc_id)""".stripMargin
 
-  private val q218 =
+  private[graft] val q218 =
     s"""WITH $dhashCtes,
        |cnt AS (
        |  SELECT dhash_hi, dhash_lo, CAST(count(*) AS BIGINT) AS dup_count
@@ -4782,7 +4780,7 @@ object OracleSql {
   /** q228: banded-dHash image near-dup replay — distinct hashes with
     * group sizes, four 16-bit bands, equi-join per band, exact
     * bit_count(xor) Hamming over the halves. */
-  private val q228 =
+  private[graft] val q228 =
     s"""WITH $dhashCtes,
        |dh AS (
        |  SELECT dhash_hi AS hi, dhash_lo AS lo,
@@ -4815,7 +4813,7 @@ object OracleSql {
     * prefix key (the oracle MAY use the single-partition window the
     * engine avoids; the ordinal is the same total order), pairs by
     * position distance < w, truncating `//` for jacc_ppm. */
-  private val q219 =
+  private[graft] val q219 =
     """WITH t AS (
       |  SELECT doc_id,
       |    substr(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'),
@@ -4845,7 +4843,7 @@ object OracleSql {
     * (unicode(c) ↔ Spark ascii(c), the q212 pairing), GREATEST for
     * the dominant count, CASE chain in canonical class order for the
     * tie-break, truncating `//` for the ppm share. */
-  private val q220 =
+  private[graft] val q220 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_transform(list_filter(string_split(text, ''),
@@ -4903,7 +4901,7 @@ object OracleSql {
     * (u<v) edge set for m and intra-counts, degrees from the
     * symmetric set, exact-integer q_num = 4·m·e_c − d_c² and
     * q_den = 4m² (HUGEINT-free: the engine enforces m ≤ 10⁸). */
-  private val q221 =
+  private[graft] val q221 =
     s"""WITH $lpaCtes,
        |ce AS (SELECT u, v FROM und WHERE u < v),
        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM ce),
@@ -4934,7 +4932,7 @@ object OracleSql {
     * smp(i) = ((17i + 3·id) % 2001) − 1000, n = 64 + id%65, rate =
     * 8000 + (id%5)·1000; silence = |smp| < 100, truncating `//` for
     * zcr_ppm, all-silent docs report lead = n, trail = 0. */
-  private val q222 =
+  private[graft] val q222 =
     """WITH ids AS (
       |  SELECT doc_id, 64 + doc_id % 65 AS n,
       |    8000 + (doc_id % 5) * 1000 AS rate
@@ -4975,7 +4973,7 @@ object OracleSql {
     * dense_rank over full list-valued suffixes (lexicographic list
     * compare ≡ the engine's pairwise-rank order); the engine builds
     * the same permutation by distributed prefix doubling. */
-  private val q223 =
+  private[graft] val q223 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '')
@@ -5036,7 +5034,7 @@ object OracleSql {
       |  FROM rep a JOIN rep b ON b.sa_rank = a.sa_rank + 1)""".stripMargin
 
   /** q224: repeated-span replay over [[saMineCtes]]. */
-  private val q224 =
+  private[graft] val q224 =
     s"""WITH $saMineCtes
       |SELECT * FROM (
       |  SELECT * FROM dup UNION ALL SELECT * FROM adj)
@@ -5048,7 +5046,7 @@ object OracleSql {
     * window generation, raw-text matching (the engine matches
     * xxhash64 of the same text), covered-index expansion, and
     * order-preserving reassembly. */
-  private val q240 =
+  private[graft] val q240 =
     s"""WITH $saMineCtes,
       |mined AS (
       |  SELECT * FROM (
@@ -5094,7 +5092,7 @@ object OracleSql {
     * agreement fields (IEEE floor bands compare bit-identically on
     * the shared parquet doubles; no cross-engine casts), integer
     * milli weights, total-order top-100. */
-  private val q225 =
+  private[graft] val q225 =
     """WITH c AS (
       |  SELECT c_custkey AS a_id, c_nationkey AS nk,
       |    right(c_name, 2) AS nt,
@@ -5131,7 +5129,7 @@ object OracleSql {
     * LIMIT), match-decision edges with even/odd key encoding, exact
     * connected components via the q47 recursive walk, then the
     * per-cluster membership rollup. */
-  private val q266 =
+  private[graft] val q266 =
     """WITH RECURSIVE c AS (
       |  SELECT c_custkey AS a_id, c_nationkey AS nk,
       |    right(c_name, 2) AS nt,
@@ -5183,7 +5181,7 @@ object OracleSql {
   /** q267: the partitioned layout changes the PLAN (directory
     * pruning), never the answer — the oracle is the plain
     * filter/aggregate (the q104/q257 convention). */
-  private val q267 =
+  private[graft] val q267 =
     """SELECT o_orderstatus, COUNT(*) AS n_orders,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
       |    AS revenue
@@ -5194,7 +5192,7 @@ object OracleSql {
     * language plus the SAME arithmetic over all rows as the 'ALL'
     * group; matching the engine's register-merge derivation proves
     * HLL mergeability bit-for-bit. */
-  private val q268 = {
+  private[graft] val q268 = {
     val cascade = (1 to 24).map(r =>
       s"WHEN w >= ${1L << (24 - r)} THEN $r").mkString("\n      |      ")
     def regs(grp: String, src: String) =
@@ -5271,7 +5269,7 @@ object OracleSql {
 
   /** q305: greedy longest-match replay — the q269 vocabulary, then
     * 12 MaxMatch rounds instead of the Viterbi frontier. */
-  private val q305 = {
+  private[graft] val q305 = {
     val rounds = greedyRounds("gr", "vocab")
     s"""WITH toks AS (
        |  SELECT unnest(list_filter(string_split(lower(text), ' '),
@@ -5300,7 +5298,7 @@ object OracleSql {
        |ORDER BY word""".stripMargin
   }
 
-  private val q269 = {
+  private[graft] val q269 = {
     val rounds = viterbiRounds("st", "vocab")
     s"""WITH toks AS (
        |  SELECT unnest(list_filter(string_split(lower(text), ' '),
@@ -5338,7 +5336,7 @@ object OracleSql {
     * 200‰ of multi-char pieces by (usage, piece) ascending, keep
     * every single char), and the refined vocabulary drives the
     * second DP (sb*) whose segmentation is the answer. */
-  private val q293 = {
+  private[graft] val q293 = {
     val dpA = viterbiRounds("sa", "vocab")
     val dpB = viterbiRounds("sb", "v1")
     s"""WITH toks AS (
@@ -5404,7 +5402,7 @@ object OracleSql {
     * fitted values are the unique isotonic optimum, so any correct
     * merge order matches the engine's stack form), and the
     * block-pooled floor ppm per original bin. */
-  private val q300 = {
+  private[graft] val q300 = {
     val rounds = (0 until 24).map { r =>
       s"""v$r AS (
          |  SELECT MIN(a.ord) AS vo FROM b$r a
@@ -5444,7 +5442,7 @@ object OracleSql {
     * itself; the fixture (block-constant EVEN v = 2·((5bx+7by+3id)
     * mod 112) + 16) makes the round trip exact, so the oracle is the
     * same closed form evaluated on v directly. */
-  private val q301 =
+  private[graft] val q301 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    1 + doc_id % 3 AS wb,
@@ -5479,7 +5477,7 @@ object OracleSql {
     * marginals (left totals + distinct successors, continuation
     * counts, type total), then the SAME two composed floors the
     * engine publishes (cont_ppm quantized first). */
-  private val q302 =
+  private[graft] val q302 =
     """WITH t AS (
       |  SELECT list_filter(string_split(lower(text), ' '),
       |    w -> w <> '') AS w
@@ -5510,7 +5508,7 @@ object OracleSql {
   /** q304: pitch-autocorrelation replay — the q215 waveform closed
     * form s(i) = (17i + 3·id) mod 2001 − 1000 over the first 64
     * samples, R(τ) by lag self-join, argmax with smallest-lag ties. */
-  private val q304 =
+  private[graft] val q304 =
     """WITH ids AS (SELECT doc_id FROM documents),
       |lags AS (SELECT range AS lag FROM range(2, 32)),
       |sm AS (
@@ -5541,7 +5539,7 @@ object OracleSql {
     * q223 list-sort suffix order, prior token with the off = 1
     * rotation wrap to the sentinel, LAG-based run counts in both
     * suffix and text order. */
-  private val q307 =
+  private[graft] val q307 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_append(list_filter(string_split(lower(text), ' '),
@@ -5584,7 +5582,7 @@ object OracleSql {
   /** q310: Dirichlet query-likelihood replay — collection model
     * quantized to ppb first, then the same two composed floors per
     * (doc, term), row_number top-10 per term. */
-  private val q310 =
+  private[graft] val q310 =
     """WITH toks AS (
       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
       |  FROM documents),
@@ -5620,7 +5618,7 @@ object OracleSql {
   /** q309: LSA-topic replay — raw term-count weights, then four
     * weighted-HITS rounds (term sum, L1 ppm renorm, doc sum, renorm),
     * truncating division throughout. */
-  private val q309 = {
+  private[graft] val q309 = {
     val iters = (1 to 4).map { i =>
       s"""a${i}raw AS MATERIALIZED (
          |  SELECT tok, SUM(w * h) AS a
@@ -5662,7 +5660,7 @@ object OracleSql {
     * cents and never touches a graph algorithm: a wrong Borůvka
     * pick, an incomplete contraction, or a lost singleton breaks the
     * per-nation (n_clusters, max_size, n_singletons). */
-  private val q313 =
+  private[graft] val q313 =
     """WITH c AS (
       |  SELECT c_nationkey, c_custkey,
       |    CAST(round(c_acctbal * 100) AS BIGINT) AS balc
@@ -5693,7 +5691,7 @@ object OracleSql {
     * a recursive CTE; Σ factor lengths telescopes to n_pos, so any
     * parse drift breaks rows. lpfe/nn MATERIALIZED: the recursive
     * walk references them per iteration. */
-  private val q314 =
+  private[graft] val q314 =
     """WITH RECURSIVE t AS MATERIALIZED (
       |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
       |    w -> w <> '') AS ws
@@ -5741,7 +5739,7 @@ object OracleSql {
     * frequent singletons by integer cross-multiply, per-doc pair
     * self-join, the same cross-multiplied support gate and floor
     * lift. */
-  private val q315 =
+  private[graft] val q315 =
     """WITH pres AS (
       |  SELECT doc_id, unnest(list_distinct(list_filter(
       |    string_split(lower(text), ' '), w -> w <> ''))) AS tok
@@ -5772,7 +5770,7 @@ object OracleSql {
     * adjacent-run collapse (RE2 has no backreferences, so the
     * engine's `(.)\1+` regex is replayed with a filtered char list),
     * drop-first/drop-zeros/rpad-3. */
-  private val q316 =
+  private[graft] val q316 =
     """WITH w AS (
       |  SELECT unnest(list_filter(string_split(p_name, ' '),
       |    x -> x <> '')) AS word
@@ -5804,7 +5802,7 @@ object OracleSql {
   /** q317: Mann–Kendall replay — the q288 daily rollup, pairwise
     * sign sum, tie-corrected 18·Var as exact integers, the same
     * cross-multiplied continuity-corrected significance gate. */
-  private val q317 =
+  private[graft] val q317 =
     """WITH d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -5833,7 +5831,7 @@ object OracleSql {
 
   /** q318: Hamilton apportionment replay — exact cents, floor
     * quotas, largest-remainder top-up ranked (rem desc, nation). */
-  private val q318 =
+  private[graft] val q318 =
     """WITH bn AS (
       |  SELECT c_nationkey,
       |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -5862,7 +5860,7 @@ object OracleSql {
     * 77/150/29 luma, the ±1 sequency-parity transform, lower-median
     * AC threshold, two unsigned 32-bit halves. coef MATERIALIZED:
     * referenced by both the median and the hash assembly. */
-  private val q319 =
+  private[graft] val q319 =
     """WITH dims AS (
       |  SELECT doc_id AS id, 8 + doc_id % 9 AS w,
       |    8 + (3 * doc_id) % 9 AS h
@@ -5903,7 +5901,7 @@ object OracleSql {
 
   /** q312: changepoint replay — daily rollup, per-group prefix sums,
     * the HUGEINT score S1l²·nr + S1r²·nl, argmax (score desc, k). */
-  private val q312 =
+  private[graft] val q312 =
     """WITH d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -5940,7 +5938,7 @@ object OracleSql {
   /** q311: local-clustering replay — the q306 balance graph
     * deduplicated undirected, brute triangle enumeration with
     * x < y < z, per-corner counts, the same floor-ppm coefficient. */
-  private val q311 =
+  private[graft] val q311 =
     """WITH cust AS (
       |  SELECT CAST(c_custkey AS BIGINT) AS ck, c_nationkey,
       |    CAST(round(c_acctbal * 100) AS BIGINT) AS balc
@@ -5992,7 +5990,7 @@ object OracleSql {
     s"((((($x % 1000003) * ($x % 1000003)) * ${r + 1}" +
       s" + 31 * $x + 7 * $r) % 1000003) * 10000000 + $x)"
 
-  private val q308 = {
+  private[graft] val q308 = {
     val rounds = (0 until 24).map { r =>
       s"""nb$r AS MATERIALIZED (
          |  SELECT e.u AS node, MIN(${misKey("e.v", r)}) AS nmin
@@ -6050,7 +6048,7 @@ object OracleSql {
     * runs a graph algorithm: any engine mistake — a cycle from
     * incomplete contraction, a non-minimal pick, a lost component —
     * breaks the count or the sum. */
-  private val q306 =
+  private[graft] val q306 =
     """SELECT c_nationkey,
       |  CAST(COUNT(*) - 1 AS BIGINT) AS n_edges,
       |  CAST(MAX(CAST(round(c_acctbal * 100) AS BIGINT))
@@ -6065,7 +6063,7 @@ object OracleSql {
     * histogram over ALL global bins (absent bins = 0), windowed
     * cumulative differences, Σ|cum| over the first m−1 bins, the
     * same composed floors as the engine. */
-  private val q303 =
+  private[graft] val q303 =
     """WITH b AS (
       |  SELECT c_nationkey, c_mktsegment,
       |    CAST(FLOOR(c_acctbal / 2000) AS BIGINT) AS sbin
@@ -6110,7 +6108,7 @@ object OracleSql {
     * FILE BYTES, never the answer: the oracle is the plain nation
     * projection crossed with the codec names (the q257/q290
     * container convention). */
-  private val q299 =
+  private[graft] val q299 =
     """SELECT c.codec, CAST(n_nationkey AS BIGINT) AS n_nationkey,
       |  n_name, CAST(n_regionkey AS BIGINT) AS n_regionkey
       |FROM nation CROSS JOIN (SELECT unnest(
@@ -6122,7 +6120,7 @@ object OracleSql {
     * with the truncating v′ = w·2¹⁶ // max|w| renormalization
     * (HUGEINT // and BigInt / both truncate toward zero), then the
     * per-vector integer projection. */
-  private val q298 = {
+  private[graft] val q298 = {
     val dims = 64
     val rounds = 8
     val roundCtes = (0 until rounds).map { r =>
@@ -6159,7 +6157,7 @@ object OracleSql {
   /** q297: backoff-support replay — position rows with their
     * (uni, bi, tri) grams, three grouped counts, highest resolving
     * order with count ≥ 2, per-doc histogram + floor milli score. */
-  private val q297 =
+  private[graft] val q297 =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(string_split(lower(text), ' '), w -> w <> '')
@@ -6208,7 +6206,7 @@ object OracleSql {
   /** q294: Aho–Corasick replay — every (pattern, start) position
     * tested by brute force; overlapping occurrences count, exactly
     * the automaton's all-matches output. */
-  private val q294 =
+  private[graft] val q294 =
     """WITH pats AS (
       |  SELECT unnest(['a', 'ta', 'tab', 'able', 'scan', 'an',
       |    'data', 'at', 'row', 'order']) AS pattern)
@@ -6224,7 +6222,7 @@ object OracleSql {
 
   /** q270: schema-evolution replay — the merged read is the union of
     * the two batches with NULL for the pre-evolution column. */
-  private val q270 =
+  private[graft] val q270 =
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
       |  CAST(CASE WHEN n_nationkey >= 12 THEN n_regionkey
       |       ELSE -1 END AS BIGINT) AS n_regionkey,
@@ -6235,7 +6233,7 @@ object OracleSql {
   /** q271: the MV rewrite changes the PLAN (base scan → MV
     * re-aggregate), never the answer — the oracle is the plain base
     * rollup (the q104/q257/q267 layout convention). */
-  private val q271 =
+  private[graft] val q271 =
     """SELECT o_orderpriority, COUNT(*) AS n_orders,
       |  CAST(MIN(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
       |    AS min_total,
@@ -6248,7 +6246,7 @@ object OracleSql {
     * the events stream's (event_type, user_id); the stream's
     * complete-mode state must equal this batch computation exactly
     * (order-free max). */
-  private val q272 = {
+  private[graft] val q272 = {
     val cascade = (1 to 24).map(r =>
       s"WHEN w >= ${1L << (24 - r)} THEN $r").mkString("\n      |      ")
     s"""WITH h0 AS (
@@ -6274,7 +6272,7 @@ object OracleSql {
     * chroma per 16×16 MCU (mx = bx//2, my = by//2 — replication
     * upsampling makes each Y block single-colored), then the q265
     * fixed-point conversion with clamps. */
-  private val q273 =
+  private[graft] val q273 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    2 * (1 + doc_id % 2) AS wb,
@@ -6331,7 +6329,7 @@ object OracleSql {
   /** q274: chi-square replay — presence sets, the three margins, and
     * the χ²·1e6 formula in HUGEINT (the BIGINT chain overflows at
     * N⁵·1e6); degenerate margins publish the −1 sentinel. */
-  private val q274 =
+  private[graft] val q274 =
     """WITH pres AS (
       |  SELECT DISTINCT doc_id, lang, t AS token FROM (
       |    SELECT doc_id, lang,
@@ -6373,7 +6371,7 @@ object OracleSql {
   /** q275: exact-median replay — lower median at rank (n+1)//2 via a
     * ROW_NUMBER subquery (the engine's bisection must land on the
     * same value). */
-  private val q275 =
+  private[graft] val q275 =
     """WITH v AS (
       |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
       |    AS BIGINT) AS c
@@ -6385,7 +6383,7 @@ object OracleSql {
 
   /** q276: sequential-pair replay — per-(user, type) extrema, the
     * existence test min_ts(a) < max_ts(b), one count per pair. */
-  private val q276 =
+  private[graft] val q276 =
     """WITH ext AS (
       |  SELECT user_id, event_type AS t,
       |    MIN(ts) AS min_ts, MAX(ts) AS max_ts
@@ -6402,7 +6400,7 @@ object OracleSql {
 
   /** q277: fairness-rate replay — per-segment ppm floors and signed
     * gaps against the overall floor. */
-  private val q277 =
+  private[graft] val q277 =
     """WITH seg AS (
       |  SELECT o_orderpriority AS segment, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
@@ -6473,7 +6471,7 @@ object OracleSql {
   }
 
   /** q226: PQ codes + exact integer quantization error. */
-  private val q226 =
+  private[graft] val q226 =
     s"""WITH $pqCtes
        |SELECT id AS vec_id,
        |  MAX(CASE WHEN s = 0 THEN code END) AS code_0,
@@ -6489,7 +6487,7 @@ object OracleSql {
 
   /** q227: PQ ADC top-5 — per-(query, subspace, code) partial
     * distances joined to the corpus codes, summed, ranked. */
-  private val q227 =
+  private[graft] val q227 =
     s"""WITH $pqCtes,
        |lut AS (
        |  SELECT qs.id AS qid, qs.s, c.code,
@@ -6575,7 +6573,7 @@ object OracleSql {
        |  GROUP BY 1, 2)""".stripMargin
   }
 
-  private val q238 =
+  private[graft] val q238 =
     s"""$ivfAdcCtes
        |SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id,
        |  adc_d2
@@ -6587,7 +6585,7 @@ object OracleSql {
   /** q286: ADC shortlist + exact re-rank replay — the q238 chain's
     * top-15 by ADC distance, re-scored with the exact integer L2 and
     * re-ranked to 5. */
-  private val q286 =
+  private[graft] val q286 =
     s"""$ivfAdcCtes,
        |short AS (
        |  SELECT query_id, neighbor_id, adc_d2
@@ -6614,7 +6612,7 @@ object OracleSql {
     * PQ chain retargeted at the RESIDUAL frame (rv = q − centroid of
     * the assigned cell), per-probe query residuals, and the ADC join
     * through (cell, subspace, code). */
-  private val q242 = {
+  private[graft] val q242 = {
     val dims = 64
     def cAssign(cent: String, out: String): String =
       s"""d_$out AS (
@@ -6736,7 +6734,7 @@ object OracleSql {
     * DECIMAL(38,15) quantization, one double division per estimate,
     * ppm-floor publication (no logarithms — ln is the one
     * transcendental the engines may round apart). */
-  private val q239 = {
+  private[graft] val q239 = {
     def emRound(k: Int): String = {
       val prev = s"e${k - 1}"
       def decSum(term: String) =
@@ -6822,7 +6820,7 @@ object OracleSql {
   /** q229: farthest-point k-center replay — k−1 unrolled greedy
     * rounds, each a min-distance-to-centers aggregate and a
     * (md DESC, vec_id ASC) LIMIT 1 argmax. */
-  private val q229 = {
+  private[graft] val q229 = {
     def d2(a: String, b: String) =
       s"CAST(list_aggregate(list_transform(range(1, 65), " +
         s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), 'sum') AS BIGINT)"
@@ -6859,7 +6857,7 @@ object OracleSql {
     * inline in SQL (same affine two-round formula the Scala side
     * emits as literals), projected sums per (vec, j), consecutive-id
     * probe pairs, truncating `DIV` for ratio_milli. */
-  private val q230 =
+  private[graft] val q230 =
     """WITH qv AS (
       |  SELECT vec_id,
       |    list_transform(embedding,
@@ -6900,7 +6898,7 @@ object OracleSql {
     * regex candidates, and the mod-10 right-aligned-parity sum as a
     * per-position transform (terms are independent, so transform+sum
     * ≡ the Spark fold). */
-  private val q231 =
+  private[graft] val q231 =
     """WITH s AS (
       |  SELECT doc_id, text || ' txn ' ||
       |    lpad(CAST((doc_id * 86243) % 100000000000000 AS VARCHAR),
@@ -6937,7 +6935,7 @@ object OracleSql {
     * results for that shape (single-row probe: 3; same point inside
     * a multi-row batch: 2) — scalar column arithmetic has no such
     * failure mode on any engine version. */
-  private val q232 = {
+  private[graft] val q232 = {
     def level(prev: String, out: String, s: Long): String =
       s"""$out AS (
          |  SELECT ck, pb,
@@ -6987,7 +6985,7 @@ object OracleSql {
 
   /** q246: Bloom register replay — the q243 PRF family folded to bit
     * positions, DISTINCT per group (union-mergeable state). */
-  private val q246 = {
+  private[graft] val q246 = {
     val bits = (0 until 3)
       .map(j => bloomBitSql("k", j, 512)).mkString(",\n      |    ")
     s"""WITH k AS (
@@ -7006,7 +7004,7 @@ object OracleSql {
     * bits, per-probe-row 3-bit membership, exact-match check only on
     * candidates (no false negatives, so that equals the full
     * semi-join). */
-  private val q247 = {
+  private[graft] val q247 = {
     val buildBits = (0 until 3)
       .map(j => bloomBitSql("k", j, 16384)).mkString(",\n      |    ")
     val passPred = (0 until 3)
@@ -7041,7 +7039,7 @@ object OracleSql {
   /** q248: k-core peeling replay — the 3 parallel-peel rounds
     * unrolled as CTEs (the q102 convention): per round, induced
     * degrees over the survivor set, HAVING deg >= k. */
-  private val q248 = {
+  private[graft] val q248 = {
     val rounds = (1 to 3).map { t =>
       s"""a$t AS (
          |  SELECT src AS node, COUNT(*) AS deg FROM und
@@ -7122,13 +7120,13 @@ object OracleSql {
   }
 
   /** q249: winnowing fingerprint selection replay (k=3, w=4). */
-  private val q249 =
+  private[graft] val q249 =
     s"""${winnowFpsSql(3, 4)}
        |SELECT doc_id, CAST(fingerprint AS BIGINT) AS fingerprint
        |FROM f ORDER BY doc_id, fingerprint""".stripMargin
 
   /** q250: winnowing-overlap pair replay (k=4, w=8, >= 2 shared). */
-  private val q250 =
+  private[graft] val q250 =
     s"""${winnowFpsSql(4, 8)}
        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_shared
@@ -7141,7 +7139,7 @@ object OracleSql {
     * the shared PRF bucket (fixed-j branches of the q243 arithmetic),
     * per-row inner products re-anchored on the full row domain, MIN
     * fold, exact join count alongside. */
-  private val q251 = {
+  private[graft] val q251 = {
     def cmRows(src: String): String = (0 until 4).map(j =>
       s"SELECT $j AS sketch_row, ${bloomBitSql("k", j, 64)} AS bucket" +
         s" FROM $src").mkString("\n      |    UNION ALL ")
@@ -7178,7 +7176,7 @@ object OracleSql {
 
   /** q252: SCD2 interval replay — run detection via lag over the
     * (date, orderkey) order, lead() over the collapsed runs. */
-  private val q252 =
+  private[graft] val q252 =
     """WITH l AS (
       |  SELECT o_custkey, o_orderdate, o_orderkey, o_orderpriority,
       |    row_number() OVER w AS rn,
@@ -7202,7 +7200,7 @@ object OracleSql {
   /** q253: TextRank replay — candidate filter, window-2 adjacency,
     * symmetrized edge counts, then the q102 PageRank recurrence
     * unrolled for 3 iterations; top-25 with word tie-break. */
-  private val q253 = {
+  private[graft] val q253 = {
     val scale = 1000000000L
     val its = (1 to 3).map { t =>
       s"""it$t AS (
@@ -7246,7 +7244,7 @@ object OracleSql {
     * teleport vector concentrated on the in-graph region-0 nations;
     * 5 iterations unrolled with a per-node base b(v) = scale // |S|
     * for seeds and 0 elsewhere (init ranks ARE the base). */
-  private val q254 = {
+  private[graft] val q254 = {
     val scale = 1000000000L
     val its = (1 to 5).map { t =>
       s"""it$t AS (
@@ -7291,7 +7289,7 @@ object OracleSql {
     * as CTEs: each round anti-joins the covered set and takes the
     * (gain DESC, doc_id ASC) argmax; covered_total is the running sum
     * of gains (exact — a gain counts only new bigrams). */
-  private val q255 = {
+  private[graft] val q255 = {
     val rounds = (2 to 4).map { r =>
       s"""g$r AS (
          |  SELECT t.doc_id, COUNT(*) AS gain
@@ -7341,7 +7339,7 @@ object OracleSql {
     * with quantizer 16); the stats are block sums and the 4×4
     * nearest-neighbor resample of that formula (gray luma is the
     * value itself: (77+150+29)v >> 8 = v). */
-  private val q256 =
+  private[graft] val q256 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    1 + doc_id % 3 AS wb,
@@ -7374,7 +7372,7 @@ object OracleSql {
 
   /** q257: the ORC layout changes the CONTAINER, never the answer —
     * the oracle is the plain projection (the q63/q104 convention). */
-  private val q257 =
+  private[graft] val q257 =
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
       |  CAST(n_regionkey AS BIGINT) AS n_regionkey
       |FROM nation ORDER BY n_nationkey""".stripMargin
@@ -7382,7 +7380,7 @@ object OracleSql {
   /** q258: LOO target-encoding replay — category stats once, the
     * self-excluded ppm mean per (category, own flag); DuckDB SUM is
     * HUGEINT, so the published column is cast back to BIGINT. */
-  private val q258 =
+  private[graft] val q258 =
     """WITH s AS (
       |  SELECT o_orderpriority, COUNT(*) AS n_cat,
       |    SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS sum_t
@@ -7401,7 +7399,7 @@ object OracleSql {
   /** q259: hashing-trick replay — the portable char-fold token hash
     * (the winnowing idiom), bucket = h mod 64, sign from the next
     * base-64 digit's parity. */
-  private val q259 =
+  private[graft] val q259 =
     """WITH toks AS (
       |  SELECT doc_id,
       |    unnest(list_filter(string_split(lower(text), ' '),
@@ -7423,7 +7421,7 @@ object OracleSql {
   /** q260: BLEU-2 replay — even/odd document pairing, per-side n-gram
     * occurrence counts, clipped-min intersection join, integer ppm
     * precisions. */
-  private val q260 =
+  private[graft] val q260 =
     """WITH pairs AS (
       |  SELECT e.doc_id // 2 AS pair_id, e.text AS hyp, o.text AS ref
       |  FROM documents e JOIN documents o ON o.doc_id = e.doc_id + 1
@@ -7472,7 +7470,7 @@ object OracleSql {
   /** q261: bounded Bellman-Ford replay — 4 relaxation rounds
     * unrolled, each round = previous frame UNION ALL the one-edge
     * relaxations, MIN per node. */
-  private val q261 = {
+  private[graft] val q261 = {
     val its = (1 to 4).map { t =>
       s"""d$t AS (
          |  SELECT node, MIN(dist) AS dist FROM (
@@ -7555,7 +7553,7 @@ object OracleSql {
        |$stats)""".stripMargin
   }
 
-  private val q262 =
+  private[graft] val q262 =
     s"""$hyperBallCtes
        |SELECT nationkey, CAST(t AS INTEGER) AS t,
        |  n_regs_set, inv_sum, raw_est_milli FROM hb
@@ -7563,7 +7561,7 @@ object OracleSql {
 
   /** q278: harmonic centrality from the HyperBall stats — per-radius
     * ball-size deltas (clamped at 0) weighted by 1/t, summed. */
-  private val q278 =
+  private[graft] val q278 =
     s"""$hyperBallCtes
        |SELECT a.nationkey AS node,
        |  CAST(SUM(GREATEST(a.raw_est_milli - p.raw_est_milli, 0) // a.t)
@@ -7612,7 +7610,7 @@ object OracleSql {
        |$emit)""".stripMargin
   }
 
-  private val q263 =
+  private[graft] val q263 =
     s"""$walkCtes
        |SELECT walk_id, CAST(step AS INTEGER) AS step, node FROM walks
        |ORDER BY walk_id, step""".stripMargin
@@ -7621,7 +7619,7 @@ object OracleSql {
     * set (2·inter ≥ union on distinct 3-gram shingles) and the q132
     * banded-candidate chain, both from one shared token CTE; counts
     * and ppm floors. */
-  private val q280 = {
+  private[graft] val q280 = {
     val as = Seq(131, 137, 139, 149, 151, 157, 163, 167)
     val bs = Seq(17, 29, 47, 71, 89, 107, 131, 151)
     val mins = as.zip(bs).zipWithIndex.map { case ((a, b), j) =>
@@ -7689,7 +7687,7 @@ object OracleSql {
   /** q281: outer stream-join replay — the batch left join restricted
     * to the resolved region (e_ts ≤ max(ts) − 2 h), where streaming
     * eviction has certainly emitted every null row. */
-  private val q281 =
+  private[graft] val q281 =
     """WITH e AS (
       |  SELECT event_id AS error_id, user_id AS eu, ts AS e_ts
       |  FROM events WHERE event_type = 'error'),
@@ -7718,7 +7716,7 @@ object OracleSql {
     * error-bearing rows, p_ts for purchase-only rows, both ≤
     * min-side max(ts) − 2 h), where streaming eviction has certainly
     * emitted every null row on both sides. */
-  private val q292 =
+  private[graft] val q292 =
     """WITH e AS (
       |  SELECT event_id AS error_id, user_id AS eu, ts AS e_ts
       |  FROM events WHERE event_type = 'error'),
@@ -7750,7 +7748,7 @@ object OracleSql {
 
   /** q282: lagged cross-stats replay — the q244 epoch-day rollup,
     * 8 shifted copies, join-on-existence sums in BIGINT casts. */
-  private val q282 =
+  private[graft] val q282 =
     """WITH d AS (
       |  SELECT event_type AS grp, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -7774,7 +7772,7 @@ object OracleSql {
     * m = 16, the per-group stats, exact distincts, and the
     * alpha-corrected estimate with signed truncating err_ppm (both
     * engines' integer division truncates toward zero). */
-  private val q283 = {
+  private[graft] val q283 = {
     val cascade = (1 to 24).map(r =>
       s"WHEN w >= ${1L << (24 - r)} THEN $r").mkString("\n      |      ")
     s"""WITH h0 AS (
@@ -7820,7 +7818,7 @@ object OracleSql {
 
   /** q284: cumulative-distinct replay — first-appearance days, daily
     * new counts, a per-group running sum. */
-  private val q284 =
+  private[graft] val q284 =
     """WITH f AS (
       |  SELECT event_type AS grp, user_id AS ent,
       |    MIN(epoch_us(ts) // 86400000000) AS first_day
@@ -7838,7 +7836,7 @@ object OracleSql {
   /** q295: Mann–Whitney replay — q287's per-value (ca, cb) rollup,
     * cumulative-below-B window, doubled-U sum, identity-derived u2_b,
     * floor AUC ppm. */
-  private val q295 =
+  private[graft] val q295 =
     """WITH b AS (
       |  SELECT o_orderpriority AS grp,
       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -7869,7 +7867,7 @@ object OracleSql {
       |FROM w GROUP BY grp, n_a, n_b
       |ORDER BY o_orderpriority""".stripMargin
 
-  private val q287 =
+  private[graft] val q287 =
     """WITH b AS (
       |  SELECT o_orderpriority AS grp,
       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -7901,7 +7899,7 @@ object OracleSql {
   /** q288: Theil-Sen replay — daily rollup, pairwise slopes, lower
     * median under the (double slope, num, den) ordering; published
     * numbers all integer (both engines' integer division truncates). */
-  private val q288 =
+  private[graft] val q288 =
     """WITH d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -7927,7 +7925,7 @@ object OracleSql {
   /** q289: seasonal-anomaly replay — weekday floor-mean profile,
     * residuals, two lower medians via ROW_NUMBER (2·rn ≥ n), the
     * 3×MAD flag. */
-  private val q289 =
+  private[graft] val q289 =
     """WITH d AS (
       |  SELECT event_type AS grp, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -7965,7 +7963,7 @@ object OracleSql {
 
   /** q279: walk-corpus skip-gram PMI replay — adjacent pairs via the
     * (walk_id, step+1) self-join, q196's ratio_ppm publication. */
-  private val q279 =
+  private[graft] val q279 =
     s"""$walkCtes,
        |pairs AS (
        |  SELECT a.node AS w1, b.node AS w2
@@ -7986,7 +7984,7 @@ object OracleSql {
   /** q264: MMR replay — quantize16 vectors (the q229 idiom), vec 0 as
     * the query, 5 argmax rounds unrolled: round 1 scores λ·rel, later
     * rounds subtract (1000−λ)·max-dot against the selected set. */
-  private val q264 = {
+  private[graft] val q264 = {
     def dot(a: String, b: String) =
       s"CAST(list_aggregate(list_transform(range(1, 65), " +
         s"i -> $a[i] * $b[i]), 'sum') AS BIGINT)"
@@ -8034,7 +8032,7 @@ object OracleSql {
     * its // truncates and would be wrong on negative chroma terms),
     * clamps included. Gray luma falls out of the same 77/150/29 >> 8
     * formula since r=g=b. */
-  private val q265 =
+  private[graft] val q265 =
     """WITH ids AS (
       |  SELECT doc_id,
       |    1 + doc_id % 3 AS wb,
@@ -8093,7 +8091,7 @@ object OracleSql {
   /** q244: seasonal-naive MASE replay — integer epoch-day rollup,
     * join-on-existence lags (calendar gaps drop out of both sums),
     * ppm DIV publication. */
-  private val q244 =
+  private[graft] val q244 =
     """WITH d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -8120,7 +8118,7 @@ object OracleSql {
 
   /** q245: CUSUM drift replay — per-type prefix sums of (x − floor
     * mean) with running extrema windows, integer alarms. */
-  private val q245 =
+  private[graft] val q245 =
     """WITH d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS x
@@ -8151,7 +8149,7 @@ object OracleSql {
   /** q243: count-min register replay — the q233 PRF family with
     * per-row affine constants, one quadratic round per sketch row,
     * exact bucket counts. */
-  private val q243 =
+  private[graft] val q243 =
     """WITH k AS (
       |  SELECT l_returnflag, CAST(l_partkey AS BIGINT) AS k
       |  FROM lineitem),
@@ -8169,7 +8167,7 @@ object OracleSql {
       |FROM e GROUP BY 1, 2, 3
       |ORDER BY l_returnflag, sketch_row, bucket""".stripMargin
 
-  private val q233 = {
+  private[graft] val q233 = {
     val cascade = (1 to 24).map(r =>
       s"WHEN w >= ${1L << (24 - r)} THEN $r").mkString("\n      |      ")
     s"""WITH h0 AS (
@@ -8198,7 +8196,7 @@ object OracleSql {
 
   /** q234: confusable-skeleton replay — the same paired fold table
     * (shared Scala literals), translate + per-char membership count. */
-  private val q234 = {
+  private[graft] val q234 = {
     val conf = TextAnalysis.confusables
     val lat = TextAnalysis.latinFor
     s"""SELECT doc_id,
@@ -8214,7 +8212,7 @@ object OracleSql {
 
   /** q235: padding-audit replay — ROW_NUMBER over (len, doc_id),
     * batch = (pos−1)//32, exact integer waste per batch. */
-  private val q235 =
+  private[graft] val q235 =
     """WITH l AS (
       |  SELECT doc_id,
       |    CAST(len(list_filter(string_split(lower(text), ' '),
@@ -8240,7 +8238,7 @@ object OracleSql {
   /** q236: HITS replay — both ppm power iterations unrolled as CTEs
     * (join-sum on one endpoint, left-join zero-fill, truncating
     * sum-normalization), the q102 convention. */
-  private val q236 = {
+  private[graft] val q236 = {
     def round(i: Int, prevH: String): String =
       s"""a${i}r AS (
          |  SELECT e.dst AS node, CAST(SUM(p.h) AS BIGINT) AS a
@@ -8288,7 +8286,7 @@ object OracleSql {
 
   /** q237: data-card replay — one aggregate row unpivoted by UNION
     * ALL of literal-metric selects. */
-  private val q237 =
+  private[graft] val q237 =
     """WITH t AS (
       |  SELECT
       |    CAST(len(list_filter(string_split(lower(text), ' '),
@@ -8331,7 +8329,7 @@ object OracleSql {
     * bottom-32 per source, merged bottom-32 per pair, and the Beyer
     * 2007 estimators ((k−1)·P div U_(k); ρ = matches/k) recomputed
     * verbatim; exact audit columns from the distinct token sets. */
-  private val q320 =
+  private[graft] val q320 =
     """WITH el AS (
       |  SELECT DISTINCT source, w AS tok
       |  FROM documents,
@@ -8419,7 +8417,7 @@ object OracleSql {
     * re-derives the same top-4-bigram/top-trigram pattern set
     * (count desc, pattern asc) and counts occurrences NAIVELY from
     * unnested token positions; backward search must agree exactly. */
-  private val q321 =
+  private[graft] val q321 =
     """WITH w AS (
       |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
       |    x -> x <> '') AS ws
@@ -8457,7 +8455,7 @@ object OracleSql {
     * PRF arm split, identical single-floor rationals; `//` and
     * Spark's `div` both truncate toward zero, so every published
     * integer matches bit-for-bit. */
-  private val q322 =
+  private[graft] val q322 =
     """WITH per AS (
       |  SELECT o_custkey AS u,
       |    SUM(CASE WHEN o_orderdate < TIMESTAMP '1998-07-01'
@@ -8520,7 +8518,7 @@ object OracleSql {
        |      FROM $table GROUP BY 1, 2)
        |    GROUP BY x))""".stripMargin
 
-  private val q323 = Seq(
+  private[graft] val q323 = Seq(
       ("part.p_partkey->p_brand", "part", "p_partkey", "p_brand"),
       ("part.p_type->p_brand", "part", "p_type", "p_brand"),
       ("part.p_size->p_brand", "part", "p_size", "p_brand"),
@@ -8537,7 +8535,7 @@ object OracleSql {
     * recursive CTE over the rn-ordered daily rollup; `//` and the
     * engine's exact power-of-two double division both truncate
     * toward zero, so negative trends agree. */
-  private val q324 =
+  private[graft] val q324 =
     """WITH RECURSIVE d AS (
       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
       |    CAST(COUNT(*) AS BIGINT) AS y
@@ -8572,7 +8570,7 @@ object OracleSql {
     * and survivors need support ≥ k−2 = 2. Converged rounds replay
     * to identical sets, publishing the same zero removals the engine
     * short-circuits to. */
-  private val q325 = {
+  private[graft] val q325 = {
     val rounds = (0 until 8).map { r =>
       s"""s$r AS MATERIALIZED (
          |  SELECT u AS a, v AS b FROM e$r
@@ -8622,7 +8620,7 @@ object OracleSql {
 
   /** q326: VARIANT replay — DuckDB's json_extract over the same
     * props column; typed long extraction matches variant_get. */
-  private val q326 =
+  private[graft] val q326 =
     """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       |  MIN(k) AS min_k, MAX(k) AS max_k,
       |  CAST(SUM(k) AS BIGINT) AS sum_k,
@@ -8636,7 +8634,7 @@ object OracleSql {
 
   /** q327: TPC-H Q5 replay — identical join topology and the exact
     * centi × (100 − discount-centi) integer revenue. */
-  private val q327 =
+  private[graft] val q327 =
     """SELECT n.n_name,
       |  CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)
       |    * (100 - CAST(round(l.l_discount * 100) AS BIGINT)))
@@ -8657,7 +8655,7 @@ object OracleSql {
 
   /** q328: TPC-H Q18 replay — grouped-quantity HAVING, join back,
     * deterministic (qty desc, orderkey) top-100. */
-  private val q328 =
+  private[graft] val q328 =
     """WITH q AS (
       |  SELECT l_orderkey,
       |    CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
@@ -8673,7 +8671,7 @@ object OracleSql {
     * ((17i + 3·id) mod 2001 − 1000, the q304 convention) through the
     * 64-term WHT definition sum; the engine's butterfly computes the
     * same integers off the REAL decoded WAV bytes. */
-  private val q329 =
+  private[graft] val q329 =
     """WITH ids AS (SELECT doc_id AS id FROM documents),
       |s AS (
       |  SELECT id, t.i AS i, ((17 * t.i + 3 * id) % 2001) - 1000 AS v
@@ -8689,7 +8687,7 @@ object OracleSql {
 
   /** q330: Sobel replay — closed-form raster at native size, 77/150/29
     * luma, the 3×3 kernels as one windowed neighbor join. */
-  private val q330 =
+  private[graft] val q330 =
     """WITH dims AS (
       |  SELECT doc_id AS id, 8 + doc_id % 9 AS w,
       |    8 + (3 * doc_id) % 9 AS h
@@ -8726,7 +8724,7 @@ object OracleSql {
 
   /** q331: item-item CF replay — co-occurrence candidates, the same
     * single-floor cos²-ppm, the same (score desc, nbr asc) top-3. */
-  private val q331 =
+  private[graft] val q331 =
     """WITH bi AS (
       |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
       |  FROM lineitem),
@@ -8755,7 +8753,7 @@ object OracleSql {
   /** q332: sequential-pattern replay — the same (ts, event_id)
     * positional order, the same first/last-occurrence containment
     * reductions, exact ppm support. */
-  private val q332 =
+  private[graft] val q332 =
     """WITH pos AS (
       |  SELECT user_id AS u, event_type AS t,
       |    row_number() OVER (PARTITION BY user_id
@@ -8793,7 +8791,7 @@ object OracleSql {
 
   /** q333: cheapest-supplier replay — same exact floor unit price,
     * same (price, suppkey) argmin tuple. */
-  private val q333 =
+  private[graft] val q333 =
     """WITH offers AS (
       |  SELECT l_partkey AS pk, l_suppkey AS sk,
       |    MIN((10000 * CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -8812,7 +8810,7 @@ object OracleSql {
 
   /** q334: Q13 replay — LEFT join before the double aggregation so
     * zero-order customers stay in the histogram. */
-  private val q334 =
+  private[graft] val q334 =
     """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS n_customers
       |FROM (
       |  SELECT c.c_custkey,
@@ -8830,7 +8828,7 @@ object OracleSql {
     * exactly the prefix max); rounds past a candidate's length see a
     * NULL token (eq = 0) and replay as provable no-ops on the
     * monotone row. F1 = 2L/(n_a+n_b) as the same single floor. */
-  private val q335 = {
+  private[graft] val q335 = {
     val rounds = (1 to 40).map { i =>
       s"""r$i AS MATERIALIZED (
          |  SELECT t.a, t.b, t.j,
@@ -8896,7 +8894,7 @@ object OracleSql {
        |      SELECT CAST($key AS VARCHAR) AS k, COUNT(*) AS c
        |      FROM $table GROUP BY 1)))""".stripMargin
 
-  private val q336 = Seq(
+  private[graft] val q336 = Seq(
       ("documents.source", "documents", "source"),
       ("events.event_type", "events", "event_type"),
       ("events.user_id", "events", "user_id"),
@@ -8908,7 +8906,7 @@ object OracleSql {
 
   /** q337: two-proportion replay — same PRF arms, same HUGEINT
     * cross-multiplied pooled z² decision. */
-  private val q337 =
+  private[graft] val q337 =
     """WITH conv AS (
       |  SELECT DISTINCT o_custkey AS u FROM orders
       |  WHERE o_orderpriority = '1-URGENT'),
@@ -8945,7 +8943,7 @@ object OracleSql {
   /** q338: stationary-distribution replay — same exact-floor
     * transition ppm, 12 unrolled π ← πP rounds with the identical
     * per-state floor. */
-  private val q338 = {
+  private[graft] val q338 = {
     val rounds = (1 to 12).map { r =>
       s"""pi$r AS MATERIALIZED (
          |  SELECT st.s, COALESCE(x.v, 0) AS v
@@ -8983,7 +8981,7 @@ object OracleSql {
     * fresh .db and re-reads it through the DSv2 source; values must
     * come back bit-exact, so the oracle is simply the same projection
     * straight off the parquet tables. */
-  private val q339 =
+  private[graft] val q339 =
     """SELECT c.c_custkey, c.c_name,
       |  CAST(round(c.c_acctbal * 100) AS BIGINT) AS bal_c,
       |  CASE WHEN c.c_custkey % 7 = 0 THEN NULL
@@ -9017,14 +9015,14 @@ object OracleSql {
        |      AS score_all
        |  FROM f)""".stripMargin
 
-  private val q340 =
+  private[graft] val q340 =
     s"""$cascadeCtes
        |SELECT doc_id, n_words, div_ppm, s1_pass,
        |  CASE WHEN s1_pass THEN score_all END AS score_ppm,
        |  s1_pass AND score_all >= 600000 AS kept
        |FROM s ORDER BY doc_id""".stripMargin
 
-  private val q341 =
+  private[graft] val q341 =
     s"""$cascadeCtes,
        |a AS (
        |  SELECT COUNT(*) AS n_docs,
@@ -9051,7 +9049,7 @@ object OracleSql {
   /** q342: sharded-sink replay — shard placement never changes the
     * rollup, so the oracle is the plain per-nation aggregate off
     * parquet (sums cast per the HUGEINT house rule). */
-  private val q342 =
+  private[graft] val q342 =
     """SELECT n.n_name,
       |  CAST(COUNT(*) AS BIGINT) AS n_cust,
       |  CAST(SUM(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
@@ -9066,7 +9064,7 @@ object OracleSql {
   /** q343: Cohen's-kappa replay over the cascade CTEs — quantized
     * marginals (never an n² product), truncating division throughout,
     * κ = 0 when pe hits 1e6 (both annotators constant). */
-  private val q343 =
+  private[graft] val q343 =
     s"""$cascadeCtes,
        |a AS (
        |  SELECT COUNT(*) AS n,
@@ -9101,7 +9099,7 @@ object OracleSql {
     * with the 1e6 // (60 + rank) contribution; the q175/q176
     * constructions are already oracle-exact twins of the engine's, so
     * the fusion compares rank-for-rank. */
-  private val q344 =
+  private[graft] val q344 =
     s"""WITH brute AS (
        |  SELECT query_id, neighbor_id, rank FROM ($q22)),
        |lshr AS (
@@ -9154,7 +9152,7 @@ object OracleSql {
 
   /** q345: fingerprint-level snapshot diff — one full outer join on
     * doc_id, unchanged keys dropped, classification by presence/fp. */
-  private val q345 =
+  private[graft] val q345 =
     s"""WITH $crawlFpCtes,
        |d AS (
        |  SELECT COALESCE(fy.doc_id, ft.doc_id) AS doc_id,
@@ -9170,7 +9168,7 @@ object OracleSql {
   /** q346: delta-only near-dup — the q77 replay with the batch/corpus
     * split driven by the q345 delta classification (added/changed vs
     * unchanged) instead of a doc_id threshold. */
-  private val q346 =
+  private[graft] val q346 =
     s"""WITH $crawlFpCtes,
        |delta AS (
        |  SELECT COALESCE(fy.doc_id, ft.doc_id) AS doc_id
@@ -9218,7 +9216,7 @@ object OracleSql {
 
   /** q347: fingerprint-store CDC merge — unchanged keys keep run 1,
     * added/changed take today's fp at run 2, removed keys drop. */
-  private val q347 =
+  private[graft] val q347 =
     s"""WITH $crawlFpCtes
        |SELECT COALESCE(fy.doc_id, ft.doc_id) AS doc_id,
        |  CASE WHEN fy.doc_id IS NULL OR fy.fp != ft.fp THEN ft.fp
@@ -9234,7 +9232,7 @@ object OracleSql {
     * (v−lo)·255 // span code, the lo + c·span // 255 reconstruction,
     * the asymmetric integer-dot rankings, and the top-5 overlap all
     * recomputed from the same fixed-point grid (q175 convention). */
-  private val q348 =
+  private[graft] val q348 =
     """WITH qv AS (
       |  SELECT vec_id, list_transform(embedding,
       |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 65536) AS BIGINT)) AS q
@@ -9340,7 +9338,7 @@ object OracleSql {
   }
 
   /** q349: SemDeDup first-arrival flags over the learned clusters. */
-  private val q349 =
+  private[graft] val q349 =
     s"""WITH $semDedupCtes
        |SELECT l.vec_id, l.cl AS cluster_id,
        |  CAST(COALESCE(d.n, 0) AS BIGINT) AS n_earlier_dups,
@@ -9351,7 +9349,7 @@ object OracleSql {
 
   /** q350: keep-one-per-group — exact connected components of the dup
     * edge set via the q47 recursive walk, min-id keeper. */
-  private val q350 =
+  private[graft] val q350 =
     s"""WITH RECURSIVE $semDedupCtes,
        |sym AS MATERIALIZED (
        |  SELECT a AS src, b AS dst FROM dup
@@ -9411,7 +9409,7 @@ object OracleSql {
 
   /** q351: frozen-centroid delta assignment — per-cluster list size,
     * delta arrivals, integer growth ppm, first delta id. */
-  private val q351 =
+  private[graft] val q351 =
     s"""WITH $ivfRunCtes
        |SELECT b.cl AS cluster_id,
        |  CAST(COALESCE(y.n, 0) AS BIGINT) AS n_yesterday,
@@ -9428,7 +9426,7 @@ object OracleSql {
 
   /** q352: centroid drift audit — exact integer mean d2 per side and
     * the cross-multiplied 25%-drift retrain flag in HUGEINT. */
-  private val q352 =
+  private[graft] val q352 =
     s"""WITH $ivfRunCtes
        |SELECT b.cl AS cluster_id,
        |  CAST(COALESCE(y.n, 0) AS BIGINT) AS n_yesterday,
@@ -9472,7 +9470,7 @@ object OracleSql {
       .stripMargin
 
   /** q353: per-doc packing assignment replay. */
-  private val q353 =
+  private[graft] val q353 =
     s"""WITH RECURSIVE $packWalkCtes
        |SELECT source, doc_id, CAST(len AS BIGINT) AS len,
        |  seq_id, seq_offset
@@ -9481,7 +9479,7 @@ object OracleSql {
   /** q354: packing-efficiency rollup over the same walk — final
     * partial sequences are inherent, so the waste column counts FULL
     * (non-final) sequences only. */
-  private val q354 =
+  private[graft] val q354 =
     s"""WITH RECURSIVE $packWalkCtes,
        |per AS (
        |  SELECT source, seq_id, COUNT(*) AS n_docs, SUM(len) AS fill
@@ -9537,7 +9535,7 @@ object OracleSql {
       |        FROM swalk GROUP BY source, seg))""".stripMargin
 
   /** q364: per-doc segment-packed assignment replay. */
-  private val q364 =
+  private[graft] val q364 =
     s"""WITH RECURSIVE $segWalkCtes
        |SELECT w.source, w.doc_id, CAST(w.len AS BIGINT) AS len,
        |  CAST(b.seq_base + w.lseq AS BIGINT) AS seq_id, w.seq_offset
@@ -9547,7 +9545,7 @@ object OracleSql {
 
   /** q365: boundary-waste ledger — base-vs-segmented sequence counts
     * and fill ppms per source, both walks replayed in one WITH. */
-  private val q365 =
+  private[graft] val q365 =
     s"""WITH RECURSIVE $packWalkCtes,
        |$segWalkCtes,
        |b AS (SELECT source, CAST(MAX(seq_id) + 1 AS BIGINT) AS n_seqs_base,
@@ -9572,7 +9570,7 @@ object OracleSql {
     * agreement audit. The chain generator prefixes every CTE name so
     * both instances coexist in one WITH clause; all MATERIALIZED (the
     * q349 inlining lesson). */
-  private val q355 = {
+  private[graft] val q355 = {
     val dims = 64; val k = 8
     def chain(src: String, p: String): String = {
       def assignCte(cent: String, out: String): String =
@@ -9651,7 +9649,7 @@ object OracleSql {
   /** q356: the q349 chain up to the SCORED pairs (no threshold), then
     * a VALUES-driven τ sweep — LEFT JOIN so a τ with zero survivors
     * still reports its row. */
-  private val q356 = {
+  private[graft] val q356 = {
     val dims = 64; val k = 8
     def assignCte(cent: String, out: String): String =
       s"""d_$out AS MATERIALIZED (
@@ -9932,7 +9930,7 @@ object OracleSql {
   }
 
   /** q362: the per-stage audit rollup over the chain. */
-  private val q362 =
+  private[graft] val q362 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |nseq AS (
@@ -9985,7 +9983,7 @@ object OracleSql {
     * each raw doc's first-removal stage (or 'kept') plus the packed
     * sequence address for survivors. Five survivor left-joins, CASE
     * in stage order. */
-  private val q368 =
+  private[graft] val q368 =
     s"""WITH RECURSIVE
        |$pipelineCtes
        |SELECT d.doc_id,
@@ -10009,7 +10007,7 @@ object OracleSql {
   /** q369: weighted-ring replication audit — the q361 capacity vnode
     * table + the q363 walk-rank replay, R = 3; publishes capacity
     * intent vs measured primary / total-responsibility load. */
-  private val q369 = {
+  private[graft] val q369 = {
     val caps = Seq(64, 64, 32, 32, 32, 32, 16, 16, 16, 16, 16, 16,
       8, 8, 8, 8)
     val capRows = caps.zipWithIndex
@@ -10455,7 +10453,7 @@ object OracleSql {
        |LEFT JOIN ${p}5 g5 ON g5.doc_id = d.doc_id
        |LEFT JOIN ${p}walk w ON w.doc_id = d.doc_id""".stripMargin
 
-  private val q370 =
+  private[graft] val q370 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 3")},
        |${incDeltaCtes("d", "doc_id % 7 = 3", "y5", "ymem", "yn2",
@@ -10469,7 +10467,7 @@ object OracleSql {
     * carry advanced per the packCarryMerge rule); day 2 (% 7 = 3)
     * runs against the GROWN store. Final select: both day ledgers,
     * day-tagged. */
-  private val q373 =
+  private[graft] val q373 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 2 AND doc_id % 7 <> 3")},
        |${incDeltaCtes("e", "doc_id % 7 = 2", "y5", "ymem", "yn2",
@@ -10510,7 +10508,7 @@ object OracleSql {
     * the store side from the persisted (doc_id, m0..m7, n_toks)
     * artifact; this replay recomputes signatures from text — equal
     * by the artifact contract (additionally spec-pinned). */
-  private val q374 =
+  private[graft] val q374 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 3")},
        |${incDeltaCtes("d", "doc_id % 7 = 3", "y5", "ymem", "yn2",
@@ -10532,7 +10530,7 @@ object OracleSql {
     * aggregated, keyed by the char-fold of "source:seq_id", placed by
     * ring successor (q357 vnodes), rolled up per shard with zero-load
     * rows kept. */
-  private val q371 =
+  private[graft] val q371 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |${ringCtes(16)},
@@ -10576,7 +10574,7 @@ object OracleSql {
     * 20-shard vnode table restricted to shards < 16, the q358
     * shared-labels contract); copies_moved counts after-set members
     * absent from the before set. */
-  private val q372 =
+  private[graft] val q372 =
     s"""WITH ${ringCtes(20)},
        |ordb AS (
        |  SELECT k.doc_id, vp.shard,
@@ -10634,7 +10632,7 @@ object OracleSql {
     * (shared by both scenarios), each after-set via the q363
     * walk-rank replay; copies_moved counts after-set members absent
     * from the before set. */
-  private val q375 = {
+  private[graft] val q375 = {
     val caps = Seq(64, 64, 32, 32, 32, 32, 16, 16, 16, 16, 16, 16,
       8, 8, 8, 8)
     def capRows(cs: Seq[Int]): String = cs.zipWithIndex
@@ -10722,7 +10720,7 @@ object OracleSql {
     * placement with each shard's deterministic (source, seq_id) read
     * order: 1-based sequence rank and the cumulative token offset
     * where each sequence starts. */
-  private val q376 =
+  private[graft] val q376 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |${ringCtes(16)},
@@ -10764,7 +10762,7 @@ object OracleSql {
     * FIRST segment of each stratum seeded from that carry (absolute
     * sequence ids); the splice window is byte-identical to q364's,
     * and the carry seeding mirrors q370's continued walk base case. */
-  private val q377 =
+  private[graft] val q377 =
     s"""WITH RECURSIVE
        |ty AS MATERIALIZED (
        |  SELECT source, doc_id, n_chars,
@@ -10842,7 +10840,7 @@ object OracleSql {
     * identical for the carried sequence, so its shard is stable),
     * flagged extends_carry when the sequence is yesterday's carried
     * partial. */
-  private val q379 =
+  private[graft] val q379 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 3")},
        |${incDeltaCtes("d", "doc_id % 7 = 3", "y5", "ymem", "yn2",
@@ -10877,7 +10875,7 @@ object OracleSql {
     * members (ylists ⋈ y5) plus the absorbed day's kept members
     * (dlists ⋈ d5); probes are the q176 eval-set convention
     * (vec_id % 20 = 0, uncurated), exact integer cosine ranking. */
-  private val q380 =
+  private[graft] val q380 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 3")},
        |${incDeltaCtes("d", "doc_id % 7 = 3", "y5", "ymem", "yn2",
@@ -10921,7 +10919,7 @@ object OracleSql {
   /** q383: quota admission — the day's kept docs (q370's dwalk rows)
     * offered per source in id order, admitted while the cumulative
     * token prefix stays within half the day's per-source offer. */
-  private val q383 =
+  private[graft] val q383 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 3")},
        |${incDeltaCtes("d", "doc_id % 7 = 3", "y5", "ymem", "yn2",
@@ -10948,7 +10946,7 @@ object OracleSql {
     * two FIFO prefix-admission windows: day 1 admits under half its
     * offer, the rejects join day 2's offer with (offered_day, id)
     * priority, day 2 admits under half the combined offer. */
-  private val q384 =
+  private[graft] val q384 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 2 AND doc_id % 7 <> 3")},
        |${incDeltaCtes("e", "doc_id % 7 = 2", "y5", "ymem", "yn2",
@@ -11023,7 +11021,7 @@ object OracleSql {
     * the char-fold of "epoch:<e>:<source>:<seq_id>" through the
     * quadratic mix, ranked per (shard, epoch) with (source, seq_id)
     * tie-breaks and an epoch-local token prefix sum. */
-  private val q382 =
+  private[graft] val q382 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |${ringCtes(16)},
@@ -11162,7 +11160,7 @@ object OracleSql {
        |ORDER BY a.change""".stripMargin
   }
 
-  private val q381 = tokenizerDriftSql("doc_id % 7 <> 3")
+  private[graft] val q381 = tokenizerDriftSql("doc_id % 7 <> 3")
 
   /** q389: the cold-start drift variant — yesterday's vocabulary is
     * the BOOTSTRAP one, trained when the store held only its first
@@ -11171,7 +11169,7 @@ object OracleSql {
     * the fixture genuinely differentiates: `fewer_pieces` carries
     * real mass (the closed-vocab fixture defeats every day-split
     * variant — SCALE.md round 15 "fixture honesty"). */
-  private val q389 = tokenizerDriftSql(
+  private[graft] val q389 = tokenizerDriftSql(
     """doc_id = (SELECT MIN(doc_id) FROM ad
        |    WHERE len(string_split(lower(text), ' ')) >= 40)""".stripMargin)
 
@@ -11180,7 +11178,7 @@ object OracleSql {
     * absorbed-day mean squared distance to the frozen centroids,
     * reusing the store chain's d_ylists and day-1's d_elists
     * all-pairs distance CTEs (winning row per vec). */
-  private val q378 =
+  private[graft] val q378 =
     s"""WITH RECURSIVE
        |${incStoreCtes("doc_id % 7 <> 2 AND doc_id % 7 <> 3")},
        |${incDeltaCtes("e", "doc_id % 7 = 2", "y5", "ymem", "yn2",
@@ -11281,7 +11279,7 @@ object OracleSql {
        |  WHERE $incCosPred)""".stripMargin
   }
 
-  private val q385 =
+  private[graft] val q385 =
     s"""WITH RECURSIVE
        |${retrainChainCtes()},
        |fz AS MATERIALIZED (
@@ -11332,7 +11330,7 @@ object OracleSql {
     * y5 ∪ dlists ⋈ d5) under fc2 vs retrained, re-screened lists
     * (rlists minus rdup) under rc2x; per probe the top-5 overlap and
     * both top-1 ids. */
-  private val q390 =
+  private[graft] val q390 =
     s"""WITH RECURSIVE
        |${retrainChainCtes()},
        |aqv AS (
@@ -11477,7 +11475,7 @@ object OracleSql {
   /** q392: the loop CONTINUING THROUGH the refreeze — day 2's ledger
     * under the old freeze joined per doc to its ledger under the new
     * one, with the disposition-drift flag. */
-  private val q392 =
+  private[graft] val q392 =
     s"""WITH RECURSIVE
        |${refreezeChainCtes()},
        |ledf AS (${incLedgerSelect("f")}),
@@ -11494,7 +11492,7 @@ object OracleSql {
   /** q393: the refreeze REPACK BILL per source — day 2's kept-doc
     * counts, packed token totals, and distinct new-sequence counts
     * under both freezes, plus the token delta. */
-  private val q393 =
+  private[graft] val q393 =
     s"""WITH RECURSIVE
        |${refreezeChainCtes()}
        |SELECT sp.source,
@@ -11522,7 +11520,7 @@ object OracleSql {
     * before columns) and on the grown 20-shard ring, with both
     * manifests' rank/offset windows and the moved/invalidated
     * verdicts. */
-  private val q386 =
+  private[graft] val q386 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |${ringCtes(16)},
@@ -11597,7 +11595,7 @@ object OracleSql {
     * placed on the q361 weighted ring and on each grown ring, with
     * both manifests' rank/offset windows and the moved/invalidated
     * verdicts, scenario-tagged. */
-  private val q391 = {
+  private[graft] val q391 = {
     val caps = Seq(64, 64, 32, 32, 32, 32, 16, 16, 16, 16, 16, 16,
       8, 8, 8, 8)
     def capRows(cs: Seq[Int]): String = cs.zipWithIndex
@@ -11798,7 +11796,7 @@ object OracleSql {
        |  SELECT c.*, c.cb + c.n_tokens <= b.budget AS admitted
        |  FROM cum3 c JOIN bud3 b USING (source))""".stripMargin
 
-  private val q387 =
+  private[graft] val q387 =
     s"""WITH RECURSIVE
        |$quotaChainCtes
        |SELECT doc_id, source, n_tokens, offered_day,
@@ -11825,7 +11823,7 @@ object OracleSql {
     * off the cold reload; the replay here never persists, so the gate
     * pins persistence TRANSPARENCY (the q387 horizon's day-3
     * ledger). */
-  private val q395 =
+  private[graft] val q395 =
     s"""WITH RECURSIVE
        |$quotaChainCtes
        |${incLedgerSelect("g")}
@@ -11920,7 +11918,7 @@ object OracleSql {
        |     FROM qadm))
        |ORDER BY metric""".stripMargin
 
-  private val q396 = nightlyReportSql(retrainChainCtes())
+  private[graft] val q396 = nightlyReportSql(retrainChainCtes())
 
   /** q398: two nights with the decision CHAINED — night 1 is the
     * encoder-shift night (%7=2 vectors ×2) whose trigger fires;
@@ -11928,7 +11926,7 @@ object OracleSql {
     * grown store and the retrained one) and every night-2 metric is
     * selected through the night-1 trigger CASE — the oracle takes
     * the decision itself rather than trusting the engine's branch. */
-  private val q398 = {
+  private[graft] val q398 = {
     def win(allPairs: String, keep: String, out: String): String =
       s"""$out AS (
          |  SELECT a.vec_id, a.cl, a.d2 FROM (
@@ -12062,14 +12060,14 @@ object OracleSql {
     * kept set may drift. The drift trigger fires and the retrain
     * branch actually runs — the firing arm of the q396 decision,
     * end-to-end under the oracle. */
-  private val q397 = nightlyReportSql(retrainChainCtes(dayScale = 2))
+  private[graft] val q397 = nightlyReportSql(retrainChainCtes(dayScale = 2))
 
   /** q394: the starvation remedy A/B — the q387 horizon admitted
     * under both policies. Day 1 is shared (nothing to carry), day 2
     * shares the pending window (day-1 admissions are identical) but
     * diverges on the budget (base + day-1 unspent), day 3 re-walks
     * its own pending. Final: per (policy, source) aggregates. */
-  private val q394 =
+  private[graft] val q394 =
     s"""WITH RECURSIVE
        |$quotaChainCtes,
        |ccar1 AS (
@@ -12198,7 +12196,7 @@ object OracleSql {
     * compared per shard: the Spearman footrule Σd² and integer
     * rho_ppm between the two epoch ranks, plus each epoch's longest
     * same-source run (gaps-and-islands over the read order). */
-  private val q388 =
+  private[graft] val q388 =
     s"""WITH RECURSIVE
        |$pipelineCtes,
        |${ringCtes(16)},
@@ -12279,7 +12277,7 @@ object OracleSql {
     * vs replica (ranks 2-3) key counts and ppm shares. The key×vnode
     * cross join is oracle-only brute force — the engine walks the
     * ring natively. */
-  private val q363 =
+  private[graft] val q363 =
     s"""WITH ${ringCtes(16)},
        |ord AS (
        |  SELECT k.doc_id, vp.shard,
@@ -12318,7 +12316,7 @@ object OracleSql {
   /** q357: ring shard-load audit — per shard, the theoretical arc
     * share (wrap-around LAG over sorted vnode positions) vs the
     * empirical successor-assignment key share. */
-  private val q357 =
+  private[graft] val q357 =
     s"""WITH ${ringCtes(16)},
        |arcs AS (
        |  SELECT shard, pos,
@@ -12351,7 +12349,7 @@ object OracleSql {
     * after-ring restricted to shards < 16 (identical vnode labels:
     * the consistent-hashing contract), so one vnode table serves
     * both sides; mod-N movement compared on the same keys. */
-  private val q358 =
+  private[graft] val q358 =
     s"""WITH ${ringCtes(20)},
        |asg AS (
        |  SELECT k.doc_id,
@@ -12384,7 +12382,7 @@ object OracleSql {
 
   /** q360: reshard migration plan — the q358 assignment CTEs grouped
     * into the per-(from, to) work order. */
-  private val q360 =
+  private[graft] val q360 =
     s"""WITH ${ringCtes(20)},
        |asg AS (
        |  SELECT k.doc_id,
@@ -12410,7 +12408,7 @@ object OracleSql {
     * counts from a VALUES capacity table (UNNEST(range(0, cap)) per
     * shard), the same fold+mix position replay, wrap-around arcs,
     * and the three ppm shares side by side. */
-  private val q361 = {
+  private[graft] val q361 = {
     val caps = Seq(64, 64, 32, 32, 32, 32, 16, 16, 16, 16, 16, 16,
       8, 8, 8, 8)
     val totalCap = caps.sum
@@ -12473,7 +12471,7 @@ object OracleSql {
     * replayed once, candidates per banding as per-config UNIONs of
     * band equi-joins, truth = exhaustive 3-gram Jaccard ≥ 1/2 via the
     * posting self-join (lossless: disjoint pairs have J = 0). */
-  private val q359 = {
+  private[graft] val q359 = {
     val as = Seq(131, 137, 139, 149, 151, 157, 163, 167)
     val bs = Seq(17, 29, 47, 71, 89, 107, 131, 151)
     val mins = as.zip(bs).zipWithIndex.map { case ((a, b), j) =>
@@ -12542,7 +12540,7 @@ object OracleSql {
   /** q366: band-geometry chooser — q359's sweep wrapped in the
     * one-row argmax: max recall under a 50% precision floor, ties
     * toward fewer candidates then more bands. */
-  private val q366 =
+  private[graft] val q366 =
     s"""SELECT bands, rows_per_band, n_candidates, n_true, n_hit,
        |  recall_ppm, precision_ppm,
        |  (precision_ppm >= 500000) AS qualifies
@@ -12554,7 +12552,7 @@ object OracleSql {
   /** q367: SemDeDup τ chooser — q356's sweep wrapped in the one-row
     * argmax: most aggressive τ (max flagged) under a 50% retention
     * floor, ties toward smaller τ. */
-  private val q367 =
+  private[graft] val q367 =
     s"""SELECT tau_num, tau_den, n_dup_edges, n_flagged, n_kept,
        |  CAST(n_kept * 1000000 //
        |    (SELECT COUNT(*) FROM embeddings) AS BIGINT) AS kept_ppm,
@@ -12565,423 +12563,4 @@ object OracleSql {
        |ORDER BY qualifies DESC, n_flagged DESC,
        |  tau_num * 1000000 // tau_den ASC
        |LIMIT 1""".stripMargin
-
-  val all: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01,
-    "q02_topk_nested_limit" -> q02,
-    "q03_dim_join_agg" -> q03,
-    "q04_parts_no_lineitem" -> q04,
-    "q05_big_order_customers" -> q05,
-    "q06_top2_per_brand" -> q06,
-    "q07_unpivot_emotions" -> q07,
-    "q08_match_reverse" -> q08,
-    "q09_greedy_match" -> q09,
-    "q10_slug_normalize" -> q10,
-    "q11_bridge_explode" -> q11,
-    "q12_mean_emotion_vector" -> q12,
-    "q13_events_enriched" -> q13,
-    "q14_user_sessions" -> q14,
-    "q15_dedup_exact" -> q15,
-    "q16_token_stats" -> q16,
-    "q17_quality_score" -> q17,
-    "q18_lang_id" -> q18,
-    "q19_ngram_sim_pairs" -> q19,
-    "q20_media_meta" -> q20,
-    "q21_stream_daily" -> q21,
-    "q22_ann_brute" -> q22,
-    // round-7 promotion: q23/q24/q25/q46 primaries are now the
-    // portable constructions, so they share their twins' oracle SQL
-    // verbatim (q175/q132/q133/q176) and graduate from rows-only to
-    // fully hash-checked.
-    "q23_ann_lsh" -> q175,
-    "q24_minhash_near_dups" -> q132,
-    "q25_simhash_pairs" -> q133,
-    "q46_ivf_ann" -> q176,
-    "q26_fingerprint" -> q26,
-    "q27_upsert_suppliers" -> q27,
-    "q28_emotion_scores" -> q28,
-    "q29_text_match_pipeline" -> q29,
-    "q30_json_bridge" -> q30,
-    "q31_salted_agg" -> q31,
-    "q32_embedding_dedup" -> q32,
-    "q33_episode_lookup" -> q33,
-    "q34_strain_lookup" -> q34,
-    "q35_label_centroids" -> q35,
-    "q36_session_windows" -> q36,
-    "q37_frame_sample" -> q37,
-    "q38_asof_purchase" -> q38,
-    "q39_rollup_revenue" -> q39,
-    "q40_running_revenue" -> q40,
-    "q41_percentiles" -> q41,
-    "q42_dedup_normalized" -> q42,
-    "q43_hourly_profile" -> q43,
-    "q44_name_similarity" -> q44,
-    "q45_pivot_lang_counts" -> q45,
-    "q47_dup_clusters" -> q47,
-    "q48_salted_join" -> q48,
-    "q49_approx_distinct" -> q49,
-    "q50_price_bands" -> q50,
-    "q51_events_json_typed" -> q51,
-    "q52_quality_filter" -> q52,
-    "q53_cube_counts" -> q53,
-    "q54_quota_sample" -> q54,
-    "q55_pii_scrub" -> q55,
-    "q56_tfidf_top_terms" -> q56,
-    "q57_shard_packing" -> q57,
-    "q58_dedup_reps" -> q58,
-    "q59_stream_enrich" -> q59,
-    "q60_stream_dedup" -> q60,
-    // q210 is the watermark-bounded twin of q60: single-batch drive ⇒
-    // no state evicts mid-run ⇒ identical result, same oracle.
-    "q210_stream_wm_dedup" -> q60,
-    "q211_compress_proxy" -> q211,
-    "q212_canonical_quality" -> q212,
-    "q213_benchmark_decontam" -> q213,
-    "q214_image_pixels" -> q214,
-    "q215_audio_pcm" -> q215,
-    "q216_gif_frames" -> q216,
-    "q217_audio_frames" -> q217,
-    "q218_image_dhash" -> q218,
-    "q219_sorted_neighborhood" -> q219,
-    "q220_script_profile" -> q220,
-    "q221_modularity" -> q221,
-    "q222_audio_zcr" -> q222,
-    "q223_suffix_ranks" -> q223,
-    "q224_repeated_spans" -> q224,
-    "q225_record_linkage" -> q225,
-    "q226_pq_codes" -> q226,
-    "q227_pq_adc" -> q227,
-    "q228_image_neardup" -> q228,
-    "q229_coreset" -> q229,
-    "q230_jl_audit" -> q230,
-    "q231_luhn_scan" -> q231,
-    "q232_hilbert_cells" -> q232,
-    "q233_hll_registers" -> q233,
-    "q234_confusables" -> q234,
-    "q235_padding_audit" -> q235,
-    "q236_hits" -> q236,
-    "q237_corpus_report" -> q237,
-    "q238_ivfadc" -> q238,
-    "q239_em_fit" -> q239,
-    "q240_mined_span_removal" -> q240,
-    "q241_png_profiles" -> q241,
-    "q242_ivfadc_residual" -> q242,
-    "q243_cm_registers" -> q243,
-    "q244_seasonal_mase" -> q244,
-    "q245_cusum_drift" -> q245,
-    "q246_bloom_registers" -> q246,
-    "q247_bloom_reduce" -> q247,
-    "q248_kcore" -> q248,
-    "q249_winnow_fps" -> q249,
-    "q250_winnow_pairs" -> q250,
-    "q251_cm_join_size" -> q251,
-    "q252_scd2_runs" -> q252,
-    "q253_textrank" -> q253,
-    "q254_personalized_pr" -> q254,
-    "q255_max_coverage" -> q255,
-    "q256_jpeg_pixels" -> q256,
-    "q257_orc_roundtrip" -> q257,
-    "q290_xml_roundtrip" -> q257,
-    // q290 shares q257's oracle by design: same projection, the
-    // container (XML vs ORC) never changes the answer
-    "q291_jpeg_progressive" -> q256,
-    // q291 shares q256's oracle by design: same DC closed form, the
-    // scan structure (progressive vs baseline) never changes the
-    // reconstruction
-    "q258_loo_encoding" -> q258,
-    "q259_feature_hash" -> q259,
-    "q260_bleu_pairs" -> q260,
-    "q261_sssp" -> q261,
-    "q262_hyperball" -> q262,
-    "q263_random_walks" -> q263,
-    "q264_mmr_select" -> q264,
-    "q265_jpeg_color" -> q265,
-    "q266_er_pipeline" -> q266,
-    "q267_partition_pruning" -> q267,
-    "q268_sketch_rollup" -> q268,
-    "q269_unigram_segment" -> q269,
-    "q293_unigram_em" -> q293,
-    "q294_pattern_scan" -> q294,
-    "q295_mann_whitney" -> q295,
-    "q296_audio_resample" -> q296,
-    "q297_backoff_support" -> q297,
-    "q298_pca_power" -> q298,
-    "q299_codec_matrix" -> q299,
-    "q300_isotonic" -> q300,
-    "q301_jpeg_encode" -> q301,
-    "q302_kneser_ney" -> q302,
-    "q303_t_closeness" -> q303,
-    "q304_pitch_autocorr" -> q304,
-    "q305_greedy_segment" -> q305,
-    "q306_boruvka_msf" -> q306,
-    "q307_bwt_runs" -> q307,
-    "q308_luby_mis" -> q308,
-    "q309_lsa_topic" -> q309,
-    "q310_dirichlet_ql" -> q310,
-    "q311_clustering_coef" -> q311,
-    "q312_changepoint" -> q312,
-    "q313_single_link" -> q313,
-    "q314_lz_factors" -> q314,
-    "q315_frequent_pairs" -> q315,
-    "q316_soundex_blocks" -> q316,
-    "q317_mann_kendall" -> q317,
-    "q318_apportion" -> q318,
-    "q319_wht_hash" -> q319,
-    "q320_theta_sets" -> q320,
-    "q321_fm_count" -> q321,
-    "q322_cuped" -> q322,
-    "q323_fd_audit" -> q323,
-    "q324_holt_trend" -> q324,
-    "q325_truss_profile" -> q325,
-    "q326_variant_stats" -> q326,
-    "q327_local_supplier_rev" -> q327,
-    "q328_large_orders" -> q328,
-    "q329_audio_wht_bands" -> q329,
-    "q330_sobel_profile" -> q330,
-    "q331_item_item_cf" -> q331,
-    "q332_seq_patterns" -> q332,
-    "q333_cheapest_supplier" -> q333,
-    "q334_cust_order_histogram" -> q334,
-    "q335_rouge_l" -> q335,
-    "q336_key_skew" -> q336,
-    "q337_two_proportion" -> q337,
-    "q338_markov_stationary" -> q338,
-    "q339_sqlite_roundtrip" -> q339,
-    "q340_cascade_filter" -> q340,
-    "q341_cascade_econ" -> q341,
-    "q342_sqlite_sharded" -> q342,
-    "q343_cascade_kappa" -> q343,
-    "q344_ann_rrf" -> q344,
-    "q345_snapshot_fp_diff" -> q345,
-    "q346_delta_dedup" -> q346,
-    "q347_fp_store_merge" -> q347,
-    "q348_sq8_recall" -> q348,
-    "q349_semdedup_kmeans" -> q349,
-    "q350_semdedup_groups" -> q350,
-    "q351_ivf_delta_assign" -> q351,
-    "q352_centroid_drift" -> q352,
-    "q353_pack_sequences" -> q353,
-    "q354_packing_stats" -> q354,
-    "q355_semdedup_sq8" -> q355,
-    "q356_semdedup_tau_sweep" -> q356,
-    "q357_hash_ring" -> q357,
-    "q358_reshard_movement" -> q358,
-    "q359_lsh_band_sweep" -> q359,
-    "q360_reshard_plan" -> q360,
-    "q361_weighted_ring" -> q361,
-    "q362_pipeline_composite" -> q362,
-    "q363_ring_replicated" -> q363,
-    "q364_pack_segmented" -> q364,
-    "q365_pack_boundary_waste" -> q365,
-    "q366_band_chooser" -> q366,
-    "q367_tau_chooser" -> q367,
-    "q368_pipeline_disposition" -> q368,
-    "q369_weighted_replication" -> q369,
-    "q370_pipeline_delta" -> q370,
-    "q371_shard_manifest" -> q371,
-    "q372_replicated_reshard" -> q372,
-    "q373_pipeline_two_day" -> q373,
-    "q374_sigstore_cross" -> q374,
-    "q375_weighted_reshard" -> q375,
-    "q376_loader_manifest" -> q376,
-    "q377_pack_seg_continued" -> q377,
-    "q378_absorb_drift" -> q378,
-    "q379_manifest_delta" -> q379,
-    "q380_serving_refresh" -> q380,
-    "q381_tokenizer_drift" -> q381,
-    "q382_epoch_order" -> q382,
-    "q383_quota_admit" -> q383,
-    "q384_quota_two_day" -> q384,
-    "q385_retrain_refreeze" -> q385,
-    "q386_ring_migration" -> q386,
-    "q387_quota_starvation" -> q387,
-    "q388_epoch_quality" -> q388,
-    "q389_tokenizer_drift_boot" -> q389,
-    "q390_retrain_serving" -> q390,
-    "q391_weighted_migration" -> q391,
-    "q392_refreeze_loop" -> q392,
-    "q393_refreeze_repack" -> q393,
-    "q394_quota_carryover" -> q394,
-    "q395_store_restart" -> q395,
-    "q396_nightly_report" -> q396,
-    "q397_encoder_shift_night" -> q397,
-    "q398_nightly_loop" -> q398,
-    "q270_schema_evolution" -> q270,
-    "q271_mv_rewrite" -> q271,
-    "q272_stream_hll" -> q272,
-    "q273_jpeg_420" -> q273,
-    "q274_chi2_terms" -> q274,
-    "q275_exact_median" -> q275,
-    "q276_seq_pairs" -> q276,
-    "q277_fairness_audit" -> q277,
-    "q278_harmonic_centrality" -> q278,
-    "q279_walk_pmi" -> q279,
-    "q280_dedup_recall" -> q280,
-    "q281_stream_outer_join" -> q281,
-    "q292_stream_full_outer" -> q292,
-    "q282_lagged_xcorr" -> q282,
-    "q283_hll_accuracy" -> q283,
-    "q284_cumulative_distinct" -> q284,
-    "q285_lsh_multiprobe" -> q285,
-    "q286_adc_rerank" -> q286,
-    "q287_ks_drift" -> q287,
-    "q288_theil_sen" -> q288,
-    "q289_seasonal_anomalies" -> q289,
-    "q61_sql_surface" -> q61,
-    "q62_approx_quantiles" -> q62,
-    "q63_csv_roundtrip" -> q63,
-    "q64_catalog" -> q64,
-    "q65_map_explode" -> q65,
-    "q66_html_extract" -> q66,
-    "q67_dsv2_source" -> q67,
-    "q68_stream_interval_join" -> q68,
-    "q69_decontaminate" -> q69,
-    "q71_repetition_signals" -> q71,
-    "q72_mixture_sample" -> q72,
-    "q73_chunk_windows" -> q73,
-    "q74_scd2_intervals" -> q74,
-    "q75_winsorize" -> q75,
-    "q76_zscore" -> q76,
-    "q77_incremental_dedup" -> q77,
-    "q78_split" -> q78,
-    "q79_substring_spans" -> q79,
-    "q80_unigram_logprob" -> q80,
-    "q81_funnel" -> q81,
-    "q82_cohort_retention" -> q82,
-    "q83_vocab_coverage" -> q83,
-    "q84_int8_quant" -> q84,
-    "q85_bm25" -> q85,
-    "q86_source_overlap" -> q86,
-    "q87_novelty" -> q87,
-    "q88_column_stats" -> q88,
-    "q89_equidepth_hist" -> q89,
-    "q90_funnel_latency" -> q90,
-    "q91_block_dedup" -> q91,
-    "q92_semantic_dedup" -> q92,
-    "q93_weighted_sample" -> q93,
-    "q94_global_ids" -> q94,
-    "q95_heavy_hitters" -> q95,
-    // q96 (round 8): registration swapped to the per-source
-    // compressibility rollup so the row oracle-hashes. The raw zlib
-    // DEFLATE rows can never hash (DuckDB has no zlib surface, and a
-    // reimplementation would pin zlib's match heuristics, not the
-    // operator); compressionRatio stays the engine API, Deflater-
-    // pinned in ScalaTest. Decision recorded in COVERAGE.md.
-    "q96_compression_ratio" -> q96n,
-    "q97_stream_type_stats" -> q97,
-    "q98_grouped_heavy_hitters" -> q98,
-    "q99_bloom_prune" -> q99,
-    "q100_span_removal" -> q100,
-    "q101_zorder_cells" -> q101,
-    "q102_pagerank" -> q102,
-    "q103_cms_verify" -> q103,
-    "q104_bucketed_join" -> q104,
-    "q105_data_quality" -> q105,
-    "q106_cdc_apply" -> q106,
-    "q107_triangle_count" -> q107,
-    "q108_jaro_winkler" -> q108,
-    "q109_bfs_hops" -> q109,
-    "q110_date_spine" -> q110,
-    "q111_trailing_avg" -> q111,
-    "q112_lexical_diversity" -> q112,
-    "q113_lang_trigrams" -> q113,
-    "q114_grouping_sets" -> q114,
-    "q115_value_deciles" -> q115,
-    "q116_snapshot_diff" -> q116,
-    "q117_mad_outliers" -> q117,
-    "q118_phrase_search" -> q118,
-    "q119_concurrent_sessions" -> q119,
-    "q120_skyline" -> q120,
-    "q121_incremental_agg" -> q121,
-    "q122_fk_violations" -> q122,
-    "q123_copurchase" -> q123,
-    "q124_rolling_actives" -> q124,
-    "q125_event_paths" -> q125,
-    "q126_anti_entropy" -> q126,
-    "q127_sliding_windows" -> q127,
-    "q128_jsonl_roundtrip" -> q128,
-    // q130 is the streaming twin of q127: same oracle by design
-    "q130_stream_sliding" -> q127,
-    "q132_minhash_oracle" -> q132,
-    "q133_simhash_oracle" -> q133,
-    "q134_rfm_segments" -> q134,
-    "q135_attribution" -> q135,
-    "q136_segment_percentiles" -> q136,
-    "q137_association_rules" -> q137,
-    "q138_cascade_delete" -> q138,
-    "q139_dsv2_sink" -> q139,
-    "q140_ship_latency" -> q140,
-    "q141_ltv_cohorts" -> q141,
-    "q142_bounce_rate" -> q142,
-    "q143_degree_profile" -> q143,
-    "q144_abc_analysis" -> q144,
-    "q145_concentration_hhi" -> q145,
-    "q146_priority_mix" -> q146,
-    "q147_prefix_jaccard" -> q147,
-    "q148_ewma" -> q148,
-    "q149_group_mode" -> q149,
-    "q150_regression" -> q150,
-    "q151_gap_fill" -> q151,
-    "q152_perplexity_filter" -> q152,
-    "q153_psi_drift" -> q153,
-    "q154_kl_source_drift" -> q154,
-    "q155_markov_transitions" -> q155,
-    "q156_kaplan_meier" -> q156,
-    "q157_ecdf_transform" -> q157,
-    "q158_weighted_median" -> q158,
-    "q159_dp_counts" -> q159,
-    "q160_containment" -> q160,
-    "q161_k_anonymity" -> q161,
-    "q162_blocklist" -> q162,
-    "q163_hard_negatives" -> q163,
-    "q164_interleave" -> q164,
-    "q165_ndcg" -> q165,
-    "q166_roc_auc" -> q166,
-    "q167_calibration" -> q167,
-    "q168_join_delta" -> q168,
-    "q169_l_diversity" -> q169,
-    "q170_quantile_norm" -> q170,
-    "q171_context_pack" -> q171,
-    "q172_semantic_decontam" -> q172,
-    "q173_corpus_pipeline" -> q173,
-    "q174_benford" -> q174,
-    "q175_lsh_oracle" -> q175,
-    "q176_ivf_oracle" -> q176,
-    "q177_sqlite_scan" -> q177,
-    "q178_sqlite_join" -> q178,
-    "q129_bpe_merges" -> q129,
-    "q131_bpe_encode" -> q131,
-    "q179_url_dedup" -> q179,
-    "q180_pseudonymize" -> q180,
-    "q181_linear_scorer" -> q181,
-    "q182_matryoshka" -> q182,
-    "q183_pii_typed" -> q183,
-    "q184_token_chunks" -> q184,
-    "q185_rrf_fusion" -> q185,
-    "q186_paragraph_dedup" -> q186,
-    "q187_dsir_weights" -> q187,
-    "q188_pr_curve" -> q188,
-    "q189_cohen_kappa" -> q189,
-    "q190_alpha_sample" -> q190,
-    "q191_token_entropy" -> q191,
-    "q192_split_leakage" -> q192,
-    "q193_zone_maps" -> q193,
-    "q194_stratified_kfold" -> q194,
-    "q195_bradley_terry" -> q195,
-    "q196_pmi_collocations" -> q196,
-    "q197_hapax_mass" -> q197,
-    "q198_markov_eval" -> q198,
-    "q199_label_prop" -> q199,
-    "q200_bootstrap_means" -> q200,
-    "q201_welch_ttest" -> q201,
-    "q202_content_chunks" -> q202,
-    "q203_mutual_nn" -> q203,
-    "q204_vocab_growth" -> q204,
-    "q205_burstiness" -> q205,
-    "q206_trending_tokens" -> q206,
-    "q207_knn_outliers" -> q207,
-    "q208_best_f1" -> q208,
-    "q209_dedup_impact" -> q209,
-    // q70 is the native-operator twin of q38: same oracle by design
-    "q70_asof_native" -> q38)
 }

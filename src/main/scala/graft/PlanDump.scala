@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Optimization-round plan capture: writes `.explain("formatted")` for
   * the named queries to <outDir>/<query>_<tag>.txt — the judge-facing
@@ -17,18 +17,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
     // operator-level plans (full lineage, no checkpoint truncation) —
     // the chain queries assemble driver-side rows or read checkpoints,
@@ -88,7 +77,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
         println(s"[plandump] wrote $name ($tag)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
     }

@@ -283,7 +283,7 @@ object Dedup {
     * buckets). The earlier self-equi-join form paid two more
     * posting-list exchanges plus two size joins; A/B at sf0.1
     * (local[32], best-of-3, with the InferFiltersFromGenerate
-    * exclusion — see Bench.scala): 1.8 s vs 4.7 s end-to-end. */
+    * exclusion — see GraftSession.scala): 1.8 s vs 4.7 s end-to-end. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, maxShingleFreq: Int = 0): DataFrame = {
     val cap = if (maxShingleFreq > 0) maxShingleFreq else Int.MaxValue

@@ -1,11 +1,8 @@
 package graft
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    SparkEntry.requireRegistered(args)
+    val spark = GraftSession(4)
     val dir = "/root/testdata/sf0.001"
     for (n <- args) {
       println(s"===== $n =====")

@@ -59,9 +59,7 @@ object MakeSqliteDb {
       TableSpec("hugealias_t", s3, rows6, rowidAlias = Some(0))))
     println(s"wrote $path")
     if (args.length > 1) {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[8]").appName("make-sqlite-shards")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = graft.GraftSession(8)
       import org.apache.spark.sql.functions._
       val df = spark.range(1, 120001)
         .select(col("id"),
