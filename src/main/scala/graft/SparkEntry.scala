@@ -31,12 +31,12 @@ object SparkEntry {
   private def dec4(c: Column): Column = c.cast("decimal(18,4)")
   private def dec6(c: Column): Column = c.cast("decimal(18,6)")
 
-  private def strainLong(s: SparkSession, dir: String): DataFrame =
-    Emotions.toLong(Emotions.strainsWide(s, dir), Seq("strain_id", "strain_name"))
+  private def strainLong(strainsWide: DataFrame): DataFrame =
+    Emotions.toLong(strainsWide, Seq("strain_id", "strain_name"))
       .select("strain_id", "emotion", "score")
 
-  private def episodeLong(s: SparkSession, dir: String): DataFrame =
-    Emotions.toLong(Emotions.episodesWide(s, dir), Seq("episode_id", "episode_name"))
+  private def episodeLong(episodesWide: DataFrame): DataFrame =
+    Emotions.toLong(episodesWide, Seq("episode_id", "episode_name"))
       .select("episode_id", "emotion", "score")
 
   // ------------------------------------------------------------- the queries
@@ -119,14 +119,14 @@ object SparkEntry {
 
   /** J6 flagship: reverse matching, de-correlated (see `entry`). */
   private def qMatchReverse(s: SparkSession, dir: String): DataFrame = {
-    val stTop2 = Matching.top2Emotions(strainLong(s, dir), "strain_id")
+    val strains = Emotions.strainsWide(s, dir)
+    val episodes = Emotions.episodesWide(s, dir)
+    val stTop2 = Matching.top2Emotions(strainLong(strains), "strain_id")
     val matched = Matching.rankMatch(
-      stTop2, "strain_id", episodeLong(s, dir), "episode_id", poolSize = 100)
+      stTop2, episodeLong(episodes), "episode_id", poolSize = 100)
     matched
-      .join(Emotions.strainsWide(s, dir).select("strain_id", "strain_name"),
-        Seq("strain_id"))
-      .join(Emotions.episodesWide(s, dir).select("episode_id", "episode_name"),
-        Seq("episode_id"))
+      .join(strains.select("strain_id", "strain_name"), Seq("strain_id"))
+      .join(episodes.select("episode_id", "episode_name"), Seq("episode_id"))
       .select("strain_id", "strain_name", "emo1", "emo2",
         "episode_id", "episode_name")
       .orderBy("strain_id")
@@ -136,8 +136,10 @@ object SparkEntry {
     * candidate matrix + driver fold; no SQL oracle (sequential
     * semantics), verified by ScalaTest invariants. */
   private def qGreedyMatch(s: SparkSession, dir: String): DataFrame = {
-    val epTop2 = Matching.top2Emotions(episodeLong(s, dir), "episode_id")
-    Matching.greedyMatch(s, epTop2, strainLong(s, dir), poolSize = 100)
+    val epTop2 = Matching.top2Emotions(
+      episodeLong(Emotions.episodesWide(s, dir)), "episode_id")
+    Matching.greedyMatch(s, epTop2, strainLong(Emotions.strainsWide(s, dir)),
+      poolSize = 100)
       .orderBy("episode_id")
   }
 
@@ -170,7 +172,7 @@ object SparkEntry {
   /** A1: mean emotion vector (long form). Scores are exact binary
     * fractions → exact sums in any partition order. */
   private def qMeanEmotionVector(s: SparkSession, dir: String): DataFrame =
-    strainLong(s, dir)
+    strainLong(Emotions.strainsWide(s, dir))
       .groupBy(col("emotion"))
       .agg(avg(col("score")).as("avg_score"), count(lit(1)).as("n"))
       .orderBy("emotion")
@@ -318,7 +320,7 @@ object SparkEntry {
         .withColumnRenamed("doc_id", "strain_id"),
       Seq("strain_id")).select("strain_id", "emotion", "score")
     val stTop2 = Matching.top2Emotions(stLong, "strain_id")
-    Matching.rankMatch(stTop2, "strain_id", epLong, "episode_id", poolSize = 100)
+    Matching.rankMatch(stTop2, epLong, "episode_id", poolSize = 100)
       .select("strain_id", "emo1", "emo2", "episode_id")
       .orderBy("strain_id")
   }
@@ -6924,7 +6926,7 @@ object SparkEntry {
     * collect is bounded by the query contract (custkey ≤ 1000). */
   private def qSqliteRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.sqlite.SqliteWriter
-    val cust = s.read.parquet(s"$dir/customer.parquet")
+    val cust = Tables.customer(s, dir)
       .filter(col("c_custkey") <= 1000)
       .select(col("c_custkey"), col("c_name"),
         col("c_nationkey").cast("long").as("nationkey"),
@@ -6933,7 +6935,7 @@ object SparkEntry {
           .otherwise(col("c_mktsegment")).as("segment"),
         col("c_acctbal").as("acctbal"))
       .orderBy("c_custkey")
-    val nat = s.read.parquet(s"$dir/nation.parquet")
+    val nat = Tables.nation(s, dir)
       .select(col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"))
       .orderBy("n_nationkey")
@@ -6963,7 +6965,7 @@ object SparkEntry {
     * a dropped row, or a mis-encoded value breaks the aggregate. */
   private def qSqliteSharded(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.sqlite.SqliteWriter
-    val cust = s.read.parquet(s"$dir/customer.parquet")
+    val cust = Tables.customer(s, dir)
       .filter(col("c_custkey") <= 1000)
       .select(col("c_custkey"), col("c_name"),
         col("c_nationkey").cast("long").as("nationkey"),
@@ -6980,7 +6982,7 @@ object SparkEntry {
       s.read.format("graft.sources.sqlite.SqliteSource")
         .option("path", p).option("table", "customer_rt").load()
     }.reduce(_.unionByName(_))
-    val nat = s.read.parquet(s"$dir/nation.parquet")
+    val nat = Tables.nation(s, dir)
       .select(col("n_nationkey").cast("long").as("nationkey"),
         col("n_name"))
     back.join(broadcast(nat), Seq("nationkey"))

@@ -18,15 +18,8 @@ object EventsStream {
 
   /** The event file as a stream, ts normalized to microseconds —
     * shared plumbing for every streaming query here. */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-  }
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeEventTs(graft.Tables.eventsRawStream(spark, dir))
 
   /** Run a streaming DataFrame to completion into a memory sink and
     * return the sink table. */
@@ -41,7 +34,7 @@ object EventsStream {
     * results, incremental execution. */
   def enrichedSegmentTotals(spark: SparkSession, dir: String): DataFrame = {
     val customers = broadcast(
-      spark.read.parquet(s"$dir/customer.parquet")
+      graft.Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_mktsegment")))
     val agg = eventsStream(spark, dir)
       .join(customers, col("user_id") === col("c_custkey"))
@@ -220,16 +213,7 @@ object EventsStream {
     * streaming query over `<dir>/events.parquet`, returned as a batch
     * DataFrame once the file is fully processed. */
   def dailyTypeCounts(spark: SparkSession, dir: String): DataFrame = {
-    // ts normalization identical to the batch reader (Tables.normalizeEventTs)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the file-stream source wants a directory: stream the sf dir with
-    // a glob pinned to the events file
-    val stream = graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val stream = eventsStream(spark, dir)
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))

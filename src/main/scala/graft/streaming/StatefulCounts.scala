@@ -15,12 +15,7 @@ object StatefulCounts {
     * returns the final (user_id, n_events) counts. */
   def runningUserCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val stream = graft.Tables.eventsRawStream(spark, dir)
       .select(col("user_id").cast("long"))
       .as[Long]
 

@@ -26,12 +26,7 @@ object StreamSketch {
     * state. Deterministic, so the q233 arithmetic over the same rows
     * is a full-strength oracle. */
   def hllPerType(spark: SparkSession, dir: String, m: Int = 64): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val stream = graft.Tables.eventsRawStream(spark, dir)
     val regs = graft.operators.Sketches
       .hllRegisterRows(stream, "event_type", "user_id", m)
       .groupBy(col("grp"), col("register"))

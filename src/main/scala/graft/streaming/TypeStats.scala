@@ -62,15 +62,10 @@ object TypeStats {
     * state per key is the emission with the highest running count. */
   def perTypeStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // transformWithState requires the RocksDB state store
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val snapshots = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val snapshots = graft.Tables.eventsRawStream(spark, dir)
       .select(col("user_id").cast("long").as("user_id"),
         col("event_type"), col("event_id").cast("long").as("event_id"),
         col("value").cast("double").as("value"))
