@@ -53,6 +53,60 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("restart from a checkpoint written by LocalCheckpointFileManager " +
+      "resumes after the last commit and matches a single run") {
+    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
+    val src = Files.createTempDirectory("graft_restart_src").toString
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    // a watermarked windowed count into a parquet sink (its own
+    // metadata log is durable across the restart, unlike memory)
+    def run(ckpt: String, sink: String) = {
+      val q = spark.readStream.schema("event_id LONG, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", "100").parquet(src)
+        .withWatermark("ts", "5 minutes")
+        .groupBy(window($"ts", "5 minutes").as("w"))
+        .agg(count(lit(1)).as("n"))
+        .select($"w.start".as("w_start"), $"n")
+        .writeStream.outputMode("append").format("parquet")
+        .option("checkpointLocation", ckpt).start(sink)
+      try { q.processAllAvailable(); q.recentProgress.toSeq }
+      finally q.stop()
+    }
+    def answer(sink: String) = spark.read.parquet(sink)
+      .as[(java.sql.Timestamp, Long)].collect().sortBy(_._1.getTime).toSeq
+    def logIds(ckpt: String, log: String) =
+      new java.io.File(ckpt, log).list().filter(_.forall(_.isDigit))
+        .map(_.toLong).toSet
+
+    spark.conf.set(key,
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    try {
+      Seq((1L, ts(1)), (2L, ts(3)), (3L, ts(11)))
+        .toDF("event_id", "ts").write.mode("append").parquet(src)
+      val tmp = Files.createTempDirectory("graft_restart").toString
+      val (ckpt, sink) = (s"$tmp/ckpt", s"$tmp/sink")
+      val first = run(ckpt, sink)
+      val lastBatch = first.map(_.batchId).max
+      assert(logIds(ckpt, "offsets") == (0L to lastBatch).toSet)
+      assert(logIds(ckpt, "commits") == (0L to lastBatch).toSet)
+      // the checkpoint files went through the checksummed local FS
+      assert(new java.io.File(ckpt, "offsets/.0.crc").isFile)
+
+      Seq((4L, ts(12)), (5L, ts(21)))
+        .toDF("event_id", "ts").write.mode("append").parquet(src)
+      val second = run(ckpt, sink)
+      // the logs were read back: numbering resumes after the last
+      // commit, and only the appended file's rows are read again
+      assert(second.nonEmpty && second.map(_.batchId).min == lastBatch + 1)
+      assert(second.map(_.numInputRows).sum == 2L)
+
+      val fresh = Files.createTempDirectory("graft_restart_one").toString
+      run(s"$fresh/ckpt", s"$fresh/sink")
+      assert(answer(sink) == answer(s"$fresh/sink"))
+      assert(answer(sink).map(_._2) == Seq(2L, 2L))
+    } finally spark.conf.unset(key)
+  }
+
   test("foreachBatch upsert sink stays idempotent across batches") {
     // The streaming twin of the reference's insert-if-absent load
     // (Scraper.py:409-412): each micro-batch is anti-joined against
