@@ -46,27 +46,13 @@ object PlanDump {
         docs, "doc_id", "text", col("doc_id") % 10 === 0, n = 8)),
       "op_piecevocab" -> (() =>
         operators.UnigramSegment.pieceVocab(docs, "text")),
-      // round-17 evidence: the delta day's exact-vs-store + exact-dedup
-      // stage (d2) with full lineage, mirroring pipelineDeltaDay's
-      // text-hash-artifact probe in THIS tree (the store side is a
-      // built, checkpointed store, as in the chain). The before-file
-      // twin was generated from the baseline commit with the same
-      // mirror over ITS probe (the direct corpus-text semi join).
+      // the delta day's exact-vs-store + exact-dedup stage (d2) with
+      // full lineage, over a built, checkpointed store as in the chain
       "op_delta_d2" -> (() => {
         val pd = docs.localCheckpoint()
-        val store = SparkEntry.buildPipelineStore(spark, sfDir,
-          pd.filter(col("doc_id") % 7 =!= 3), pd)
-        val d1 = SparkEntry.pipelineGate(pd.filter(col("doc_id") % 7 === 3))
-        val d1Th = d1.select(xxhash64(col("text")).as("th")).distinct()
-        val hitTh = store.textHash.join(d1Th, Seq("th"), "semi")
-        val storeTexts = store.docs
-          .join(hitTh, xxhash64(col("text")) === col("th"), "semi")
-          .select("text")
-        val exactVsStore = d1.join(storeTexts, Seq("text"), "semi")
-          .select("doc_id")
-        d1.join(operators.Dedup.exact(d1, col("text"), col("doc_id"))
-            .select(col("keeper_id").as("doc_id")), Seq("doc_id"), "semi")
-          .join(exactVsStore, Seq("doc_id"), "left_anti")
+        val (storeDocs, Seq(day)) = SparkEntry.daySplit(pd, Seq(3))
+        val store = SparkEntry.buildPipelineStore(spark, sfDir, storeDocs, pd)
+        SparkEntry.exactVsStore(store, SparkEntry.pipelineGate(day))
       }))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       try {

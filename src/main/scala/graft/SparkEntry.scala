@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.domain.Emotions
@@ -4395,7 +4396,19 @@ object SparkEntry {
     * and keeps retrain = false. */
   private def qCentroidDrift(s: SparkSession, dir: String): DataFrame = {
     val (y, d, cents) = ivfRuns(s, dir)
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
+    driftByCluster(y, d, cents, "yesterday", "delta").orderBy("cluster_id")
+  }
+
+  /** The drift audit of vectors `d` against the members `y` under the
+    * same frozen centroids: per cluster, the member counts and exact
+    * integer mean d2 of each side (`n_<yName>`, `mean_d2_<yName>`, …),
+    * and `retrain` when the `d` mean exceeds the `y` mean by > 25%,
+    * tested as 4·Σd2_d·n_y > 5·Σd2_y·n_d in decimal(19,0) (sums reach
+    * 2^54, the products 2^68). A cluster with no `d` or no `y` vectors
+    * has no drift evidence and keeps retrain = false. */
+  private def driftByCluster(y: DataFrame, d: DataFrame, cents: DataFrame,
+      yName: String, dName: String): DataFrame = {
+    def dec(c: Column) = c.cast("decimal(19,0)")
     val ya = IvfIndex.assignPortableInlinedWithDist(y, cents)
       .groupBy("cluster_id")
       .agg(sum(col("d2")).as("sum_y"), count(lit(1)).as("n_y"))
@@ -4406,17 +4419,16 @@ object SparkEntry {
       .join(ya, Seq("cluster_id"), "left")
       .join(da, Seq("cluster_id"), "left")
       .select(col("cluster_id"),
-        coalesce(col("n_y"), lit(0L)).as("n_yesterday"),
-        coalesce(col("n_d"), lit(0L)).as("n_delta"),
+        coalesce(col("n_y"), lit(0L)).as(s"n_$yName"),
+        coalesce(col("n_d"), lit(0L)).as(s"n_$dName"),
         expr("coalesce(sum_y, 0L) div greatest(coalesce(n_y, 0L), 1L)")
-          .as("mean_d2_yesterday"),
+          .as(s"mean_d2_$yName"),
         expr("coalesce(sum_d, 0L) div greatest(coalesce(n_d, 0L), 1L)")
-          .as("mean_d2_delta"),
+          .as(s"mean_d2_$dName"),
         (dec(coalesce(col("sum_d"), lit(0L))) *
             dec(coalesce(col("n_y"), lit(0L))) * lit(4) >
           dec(coalesce(col("sum_y"), lit(0L))) *
             dec(coalesce(col("n_d"), lit(0L))) * lit(5)).as("retrain"))
-      .orderBy("cluster_id")
   }
 
   /** Round-13: training-batch sequence packing — per-source greedy
@@ -4474,73 +4486,162 @@ object SparkEntry {
     * (those plans are audited individually in PLANS.md); the splice
     * between stages is an id semi/anti-join, and intermediate
     * survivor sets are eagerly checkpointed once and reused by the
-    * stage audits — no stage recomputes its predecessors. */
-  /** The q362/q368 stage chain: raw docs plus the five survivor sets
-    * and the tokenized/packed tail, every set eagerly checkpointed so
-    * neither consumer recomputes a predecessor. */
-  private case class PipelineStages(docs: DataFrame, s1: DataFrame,
-    s2: DataFrame, s3: DataFrame, s4: DataFrame, s5: DataFrame,
-    s5tok: DataFrame, packed: DataFrame)
+    * stage audits (s4 excepted: its anti-join over checkpointed
+    * inputs is re-read only by the audit). */
+  /** The q362/q368 stage chain: raw docs, [[pipelineChain]]'s five
+    * survivor sets, and the tokenized/packed tail (checkpointed: the
+    * manifest family re-reads `packed`). */
+  private[graft] case class PipelineStages(docs: DataFrame,
+    chain: PipelineChain, s5tok: DataFrame, packed: DataFrame)
 
   private def pipelineStages(s: SparkSession,
-      dir: String): PipelineStages = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        col("source"), col("n_chars").cast("long").as("n_chars"))
+      dir: String): PipelineStages =
+    pipelineStagesFrom(s, Tables.documents(s, dir)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"),
+          col("source"), col("n_chars").cast("long").as("n_chars"))
+        .localCheckpoint(),
+      pipelineQuant(s, dir))
+
+  /** Fixture-injectable composite: [[pipelineChain]] over `docs` as
+    * both the curated and the benchmark corpus, then the tokenize →
+    * pack tail under a vocabulary trained on the survivors. Extra
+    * columns of `docs` (q362's `n_chars`) ride through the chain's
+    * semi and anti joins. */
+  private[graft] def pipelineStagesFrom(s: SparkSession, docs: DataFrame,
+      quant: DataFrame): PipelineStages = {
+    val chain = pipelineChain(s, docs, docs, quant)
+    val s5tok = docTokens(chain.s5, UnigramSegment.collectPieces(
+      UnigramSegment.pieceVocab(chain.s5, "text"))).localCheckpoint()
+    PipelineStages(docs, chain, s5tok, packTokens(s5tok).localCheckpoint())
+  }
+
+  // The curation chain's stage constants, one definition each: the
+  // q362 composite, the store build, every delta day and the retrain
+  // all read these.
+  /** q173 quality gate: minimum space-split token count. */
+  private final val GateMinTokens = 40
+  /** SemDeDup blocking: Lloyd k-means geometry (q349/q351). */
+  private final val LloydK = 8
+  private final val LloydIters = 2
+  /** SemDeDup verdict: exact integer cosine >= 3/10. */
+  private final val SemCosNum = 3
+  private final val SemCosDen = 10
+  /** q213 benchmark screen: doc_id % 10 == 0 is the benchmark, a
+    * shared 8-gram flags a doc. */
+  private final val BenchEvery = 10
+  private final val BenchNgram = 8
+  /** q353 packing at token grain: sequence capacity. */
+  private final val PackTokens = 256L
+
+  /** The curation chain's nested survivor sets s5 ⊆ … ⊆ s1, plus what
+    * a store freezes from them: `sigs` (s2 signed once —
+    * [[operators.MinHashLSH.portableSignatureStore]] rows), the Lloyd
+    * `cents`, s3's cluster `assigned` vectors, and the benchmark
+    * flags `contamDrop`. */
+  private[graft] case class PipelineChain(s1: DataFrame, s2: DataFrame,
+      sigs: DataFrame, s3: DataFrame, cents: DataFrame,
+      assigned: DataFrame, s4: DataFrame, contamDrop: DataFrame,
+      s5: DataFrame) {
+    def stages: Seq[DataFrame] = Seq(s1, s2, s3, s4, s5)
+  }
+
+  /** The curation chain over `yDocs`: gate → exact dedup (q15) → MinHash
+    * near dedup (q132: drop the larger id of every J >= 1/2 pair) →
+    * Lloyd + SemDeDup re-trained on the survivors (q349) → benchmark
+    * decontamination (q213) with flags computed over the FULL corpus
+    * `docs`. Every set except s4 is checkpointed; s4 stays lazy (s5
+    * reads it once). The blocklist screen stays OUT of the gate
+    * deliberately: the fixture's only blocklistable token is the
+    * planted dup marker itself, and screening it would starve the
+    * three dedup stages (q173/q174 exercise it standalone). */
+  private[graft] def pipelineChain(s: SparkSession, yDocs: DataFrame,
+      docs: DataFrame, quant: DataFrame): PipelineChain = {
+    // the chain is a sequence of eager checkpoints, so at fixture
+    // scale it is job-submission bound: the flags depend only on
+    // `docs`, so they materialize on a concurrent driver thread and
+    // are awaited at s5 (Spark supports concurrent job submission
+    // from one session)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val contamF = Future { contaminatedIds(docs).localCheckpoint() }
+    val s1 = pipelineGate(yDocs).localCheckpoint()
+    val s2 = s1.join(exactKeepers(s1), Seq("doc_id"), "semi")
       .localCheckpoint()
-    // stage 1 — curate: the q173 quality gate (min-token floor). The
-    // blocklist screen stays OUT of this composite deliberately: the
-    // fixture's only blocklistable token is the planted dup marker
-    // itself, and screening it would starve the three dedup stages
-    // this DAG exists to chain (the screen is exercised standalone by
-    // q173/q174).
-    val toksOf = split(lower(col("text")), " ")
-    val s1 = docs.filter(size(toksOf) >= 40).localCheckpoint()
-    // stage 2 — exact dedup: q15's keeper election on raw text
-    val keeperIds = Dedup.exact(s1, col("text"), col("doc_id"))
-      .select(col("keeper_id").as("doc_id"))
-    val s2 = s1.join(keeperIds, Seq("doc_id"), "semi").localCheckpoint()
-    // stage 3 — near dedup: q132's portable MinHash pairs, drop the
-    // larger id of every J >= 1/2 pair (first-arrival)
-    val nearDrop = MinHashLSH.nearDuplicatesPortable(s2, "doc_id", "text")
-      .select(col("b").as("doc_id")).distinct()
-    val s3 = s2.join(nearDrop, Seq("doc_id"), "left_anti").localCheckpoint()
-    // stage 4 — SemDeDup: the q349 chain re-trained on the survivors
-    val vecs = Tables.embeddings(s, dir)
-      .select(col("vec_id").cast("long").as("id"),
-        Similarity.quantize16(col("embedding")).as("q"))
-      .join(s3.select(col("doc_id").as("id")), Seq("id"))
-      .localCheckpoint() // round-16: Lloyd re-reads this 4×
-    // round-17: checkpoint the k-row centroid frame and assign with
-    // the inlined map-only argmin (the buildPipelineStoreFrom shape) —
-    // the lazy window form paid a crossJoin + window shuffle+sort over
-    // the vector corpus inside this checkpoint's evaluation
-    val stageCents = IvfIndex.trainPortable(s, vecs, k = 8, iters = 2)
+    // sign once: this frame drives the near-dup band joins and, sliced
+    // to the final survivors, IS the frozen q374 signature artifact
+    // (the signature is a per-doc function, so the slice is bit-equal
+    // to re-signing s5 — the artifact contract)
+    val sigs = MinHashLSH.portableSignatureStore(s2, "doc_id", "text")
       .localCheckpoint()
-    val assigned = IvfIndex.assignPortableInlined(vecs, stageCents)
+    val s3 = s2.join(MinHashLSH.nearDuplicatesFromSigStore(sigs, s2,
+        "doc_id", "text").select(col("b").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    val semDrop = Similarity.semanticDupEdges(assigned, 3, 10)
-      .select(col("b").as("doc_id")).distinct()
-    val s4 = s3.join(semDrop, Seq("doc_id"), "left_anti").localCheckpoint()
-    // stage 5 — decontaminate: q213 flags vs the FULL-corpus benchmark
-    // (per-doc flags depend only on the doc's own grams + the bench
-    // postings, so full-corpus evaluation IS survivor semantics)
-    val contamDrop = Dedup.benchmarkNgramContamination(docs,
-        "doc_id", "text", col("doc_id") % 10 === 0, n = 8)
-      .filter(col("flagged")).select("doc_id")
+    val (cents, assigned, s4) = semanticStage(s, quant, s3)
+    val contamDrop = Await.result(contamF, Duration.Inf)
     val s5 = s4.join(contamDrop, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    // stage 6 — tokenize: q305 unigram vocab + greedy DP on survivors
-    val segs = UnigramSegment.greedySegment(s5, "text",
-        UnigramSegment.pieceVocab(s5, "text"))
-      .select(col("word"), col("n_pieces").cast("long").as("np"))
-    val s5tok = docTokenFrame(s5, segs).localCheckpoint()
-    // stage 7 — pack: q353's first-fit fold at 256 tokens per sequence
-    val packed = Curation.packSequences(s5tok, "doc_id", "n_tokens",
-        "source", capacity = 256L)
-      .localCheckpoint()
-    PipelineStages(docs, s1, s2, s3, s4, s5, s5tok, packed)
+    PipelineChain(s1, s2, sigs, s3, cents, assigned, s4, contamDrop, s5)
   }
+
+  /** SemDeDup over `survivors`: Lloyd trained on their quantized
+    * vectors, each vector assigned to its nearest centroid, and the
+    * larger id of every same-cluster pair at cosine >= 3/10 dropped.
+    * Returns (centroids, assignments, the lazy kept set). */
+  private def semanticStage(s: SparkSession, quant: DataFrame,
+      survivors: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    // checkpointed: Lloyd's seed scan, each training iteration and the
+    // assignment all re-read this join
+    val vecs = quant.join(survivors.select(col("doc_id").as("id")),
+        Seq("id"))
+      .localCheckpoint()
+    val cents = IvfIndex.trainPortable(s, vecs, k = LloydK,
+        iters = LloydIters)
+      .localCheckpoint()
+    val assigned = IvfIndex.assignPortableInlined(vecs, cents)
+      .localCheckpoint()
+    (cents, assigned,
+      survivors.join(semanticDupIds(assigned), Seq("doc_id"), "left_anti"))
+  }
+
+  /** The larger id of every SemDeDup pair among `assigned` vectors. */
+  private def semanticDupIds(assigned: DataFrame): DataFrame =
+    Similarity.semanticDupEdges(assigned, SemCosNum, SemCosDen)
+      .select(col("b").as("doc_id")).distinct()
+
+  /** q15's keeper ids: the first arrival (min id) per text. */
+  private def exactKeepers(df: DataFrame): DataFrame =
+    Dedup.exact(df, col("text"), col("doc_id"))
+      .select(col("keeper_id").as("doc_id"))
+
+  /** Ids the benchmark screen flags. A doc's flag depends only on its
+    * own grams and the benchmark postings, so evaluating the full
+    * corpus once IS survivor semantics for every stage and day. */
+  private def contaminatedIds(docs: DataFrame): DataFrame =
+    Dedup.benchmarkNgramContamination(docs, "doc_id", "text",
+        col("doc_id") % BenchEvery === 0, n = BenchNgram)
+      .filter(col("flagged")).select("doc_id")
+
+  /** The embeddings table as (id, q) quantized vectors. */
+  private def pipelineQuant(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id").cast("long").as("id"),
+        Similarity.quantize16(col("embedding")).as("q"))
+
+  /** Per-doc token counts of `df` under a collected piece set: q305's
+    * greedy segmentation, charged per word occurrence by
+    * [[docTokenFrame]]. */
+  private def docTokens(df: DataFrame,
+      pieces: Broadcast[Set[String]]): DataFrame =
+    docTokenFrame(df,
+      UnigramSegment.greedySegmentPieces(df, "text", pieces)
+        .select(col("word"), col("n_pieces").cast("long").as("np")))
+
+  /** q353's per-source first-fit fold at [[PackTokens]] per sequence. */
+  private def packTokens(tok: DataFrame): DataFrame =
+    Curation.packSequences(tok, "doc_id", "n_tokens", "source",
+      capacity = PackTokens)
 
   /** q305-convention per-doc token counts under a given (word, np)
     * segment table: every word OCCURRENCE charges its greedy piece
@@ -4575,13 +4676,11 @@ object SparkEntry {
   private def qPipelineComposite(s: SparkSession, dir: String): DataFrame = {
     val st = pipelineStages(s, dir)
     import st._
-    // ---- the audit (exact scalars over the checkpointed stages) ----
-    // round-16: ONE driver action for all 14 scalars — each stage
-    // aggregate is a one-row frame over an already-checkpointed stage,
-    // so cross-joining them and collecting once replaces 14 sequential
-    // jobs (count, sum pairs) with a single plan the scheduler runs in
-    // one submission; the aggregates themselves are unchanged
-    val stageFrames = Seq(docs, s1, s2, s3, s4, s5)
+    // ---- the audit (exact scalars over the stages) ----
+    // ONE driver action for all 14 scalars: each stage aggregate is a
+    // one-row frame, so cross-joining them and collecting once runs a
+    // single plan in one submission instead of 14 sequential jobs
+    val stageFrames = docs +: chain.stages
     val scalarRow = stageFrames.zipWithIndex
       .map { case (d, i) =>
         d.agg(count(lit(1)).as(s"c$i"),
@@ -4631,10 +4730,7 @@ object SparkEntry {
   private def qPipelineDisposition(s: SparkSession,
       dir: String): DataFrame = {
     val st = pipelineStages(s, dir)
-    // round-16: the six-way left-join chain became the shared
-    // [[stageDepthLedger]] tagged-union aggregation (one exchange)
-    stageDepthLedger(st.docs,
-        Seq(st.s1, st.s2, st.s3, st.s4, st.s5), st.packed)
+    stageDepthLedger(st.docs, st.chain.stages, st.packed)
       .orderBy("doc_id")
   }
 
@@ -4685,11 +4781,10 @@ object SparkEntry {
     members: DataFrame, cents: DataFrame, vocab: DataFrame,
     carry: DataFrame, sigs: DataFrame, contamDrop: DataFrame,
     quant: DataFrame, textHash: DataFrame,
-    // round-17: the FROZEN vocab collected+broadcast once at
-    // freeze time — pipelineDeltaDay's greedy tokenize re-used this
-    // broadcast instead of paying one driver collect job per day
-    // (guide §1.2; a retrain refreezes it with the new vocab)
-    vocabPieces: org.apache.spark.broadcast.Broadcast[Set[String]])
+    // the FROZEN vocab collected+broadcast once at freeze time, so a
+    // delta day's tokenize pays no driver collect job (a retrain
+    // refreezes it with the new vocab)
+    vocabPieces: Broadcast[Set[String]])
 
   /** One delta day's outputs: the q368-shaped ledger plus exactly the
     * pieces [[absorbPipelineDay]] folds back into the store — kept
@@ -4701,7 +4796,7 @@ object SparkEntry {
     packed: DataFrame)
 
   private[graft] def pipelineGate(df: DataFrame): DataFrame =
-    df.filter(size(split(lower(col("text")), " ")) >= 40)
+    df.filter(size(split(lower(col("text")), " ")) >= GateMinTokens)
 
   /** Round-16 disposition ledger (shared by q368's composite chain
     * and every delta day): the pipeline's survivor sets are NESTED,
@@ -4746,18 +4841,12 @@ object SparkEntry {
         coalesce(col("_off2"), lit(-1L)).as("seq_offset"))
   }
 
-  /** Build the frozen store by running the FULL chain over `yDocs`
-    * (yesterday's corpus) once: gate → exact dedup → within-store
-    * near dedup → Lloyd train + SemDeDup → benchmark decontamination
-    * (flags computed over the FULL corpus `docs`, the fixed %10 bench
-    * convention) → freeze vocab, pack carry, and the signature
-    * artifact over the curated survivors. */
+  /** Build the frozen store by running [[pipelineChain]] over `yDocs`
+    * (yesterday's corpus) once, benchmark flags over the FULL corpus
+    * `docs`, then [[freezeStore]] over the curated survivors. */
   private[graft] def buildPipelineStore(s: SparkSession, dir: String,
       yDocs: DataFrame, docs: DataFrame): PipelineStore =
-    buildPipelineStoreFrom(s, yDocs, docs,
-      Tables.embeddings(s, dir)
-        .select(col("vec_id").cast("long").as("id"),
-          Similarity.quantize16(col("embedding")).as("q")))
+    buildPipelineStoreFrom(s, yDocs, docs, pipelineQuant(s, dir))
 
   /** Fixture-injectable form (docs and quantized vectors passed in) —
     * the fold-equivalence property spec drives the K-day loop over
@@ -4765,92 +4854,74 @@ object SparkEntry {
   private[graft] def buildPipelineStoreFrom(s: SparkSession,
       yDocs: DataFrame, docs: DataFrame,
       quant: DataFrame): PipelineStore = {
-    // round-17 (guide §2.6, overlap independent jobs): the build is a
-    // sequence of eager one-task-per-stage checkpoints, so at fixture
-    // scale it is job-SUBMISSION bound — independent branches run on
-    // concurrent driver threads and the scheduler back-fills idle
-    // cores. Each branch computes exactly the frame it computed
-    // sequentially (deterministic inputs, deterministic outputs);
-    // Spark supports concurrent job submission from one session.
+    val ch = pipelineChain(s, yDocs, docs, quant)
+    freezeStore(ch.s5, ch.assigned, ch.sigs, ch.cents, ch.contamDrop,
+      quant, pieces => Curation.packCarry(
+        packTokens(docTokens(ch.s5, pieces)), "doc_id", "source")
+        .localCheckpoint())
+  }
+
+  /** Freeze the curated corpus `docs` into a store: the unigram vocab
+    * (collected once), the members (`assigned` vectors of the kept
+    * docs), the signature slice (`sigs` rows of the kept docs), the
+    * text-hash artifact, and the pack carry `carry` derives from the
+    * frozen pieces — the build packs its survivors, the retrain keeps
+    * the shipped carry. */
+  private def freezeStore(docs: DataFrame, assigned: DataFrame,
+      sigs: DataFrame, cents: DataFrame, contamDrop: DataFrame,
+      quant: DataFrame,
+      carry: Broadcast[Set[String]] => DataFrame): PipelineStore = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // contamination flags depend only on the FULL corpus — evaluate
-    // them concurrently with the whole gate→exact→near dedup chain
-    // (they are not needed until y5)
-    val contamF = Future {
-      Dedup.benchmarkNgramContamination(docs,
-          "doc_id", "text", col("doc_id") % 10 === 0, n = 8)
-        .filter(col("flagged")).select("doc_id").localCheckpoint()
-    }
-    val y1 = pipelineGate(yDocs).localCheckpoint()
-    val y2 = y1.join(Dedup.exact(y1, col("text"), col("doc_id"))
-      .select(col("keeper_id").as("doc_id")), Seq("doc_id"), "semi")
-      .localCheckpoint()
-    // round-16 sign-once: the store corpus is tokenized+signed
-    // EXACTLY once — the same checkpointed frame drives the
-    // within-store near-dup band joins here and, sliced to the final
-    // survivors below, IS the frozen q374 signature artifact (the
-    // signature is a per-doc function, so the slice is bit-equal to
-    // re-signing y5 — the artifact contract). The old shape paid a
-    // second full tokenize+signature pass for the artifact.
-    val sigY2 = MinHashLSH.portableSignatureStore(y2, "doc_id", "text")
-      .localCheckpoint()
-    val y3 = y2.join(MinHashLSH.nearDuplicatesFromSigStore(sigY2, y2,
-        "doc_id", "text").select(col("b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // round-16: checkpointed — Lloyd's seed scan, each training
-    // iteration, and the assignment below each re-evaluated this
-    // corpus-sized join (2 exchanges a time) through the lazy lineage
-    val yVecs = quant.join(y3.select(col("doc_id").as("id")), Seq("id"))
-      .localCheckpoint()
-    val cents = IvfIndex.trainPortable(s, yVecs, k = 8, iters = 2)
-      .localCheckpoint() // FROZEN
-    val yAssigned = IvfIndex.assignPortableInlined(yVecs, cents)
-      .localCheckpoint()
-    val y4 = y3.join(Similarity.semanticDupEdges(yAssigned, 3, 10)
-      .select(col("b").as("doc_id")).distinct(), Seq("doc_id"),
-      "left_anti")
-    val contamDrop = Await.result(contamF, Duration.Inf)
-    val y5 = y4.join(contamDrop, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // the STORE
-    // the four frozen artifacts below branch independently off y5 —
-    // the vocab→tokenize→pack chain is the long pole; members, the
-    // signature slice, and the text-hash projection overlap it
-    val vocabCarryF = Future {
-      val vocab = UnigramSegment.pieceVocab(y5, "text")
-        .localCheckpoint() // FROZEN
-      val vocabPieces = UnigramSegment.collectPieces(vocab) // once
-      val yTok = docTokenFrame(y5,
-        UnigramSegment.greedySegmentPieces(y5, "text", vocabPieces)
-          .select(col("word"), col("n_pieces").cast("long").as("np")))
-      val carry = Curation.packCarry(
-        Curation.packSequences(yTok, "doc_id", "n_tokens", "source",
-          capacity = 256L), "doc_id", "source").localCheckpoint()
-      (vocab, vocabPieces, carry)
+    // the artifacts branch independently off the checkpointed `docs`:
+    // the vocab → tokenize → pack chain is the long pole, and members,
+    // the signature slice and the text hashes overlap it
+    val vocabF = Future {
+      val vocab = UnigramSegment.pieceVocab(docs, "text")
+        .localCheckpoint()
+      val pieces = UnigramSegment.collectPieces(vocab)
+      (vocab, pieces, carry(pieces))
     }
     val membersF = Future {
-      yAssigned.join(y5.select(col("doc_id").as("id")), Seq("id"))
+      assigned.join(docs.select(col("doc_id").as("id")), Seq("id"))
         .localCheckpoint()
     }
     val sigsF = Future {
-      sigY2.join(y5.select("doc_id"), Seq("doc_id"), "semi")
-        .localCheckpoint() // the near-dup ARTIFACT (q374) — see sigY2
+      sigs.join(docs.select("doc_id"), Seq("doc_id"), "semi")
+        .localCheckpoint()
     }
-    // round-17: the exact-dup ARTIFACT — one map-only projection of
-    // the checkpointed survivor frame (8 bytes/doc); every delta day's
-    // exact-vs-store probe reads this instead of the store's text
+    // the exact-dup artifact: one map-only projection (8 bytes/doc)
+    // that every delta day's exact-vs-store probe reads instead of the
+    // store's text; projected, not sliced, because a hash carries no
+    // doc id
     val textHashF = Future {
-      y5.select(xxhash64(col("text")).as("th")).localCheckpoint()
+      docs.select(xxhash64(col("text")).as("th")).localCheckpoint()
     }
-    val (vocab, vocabPieces, carry) =
-      Await.result(vocabCarryF, Duration.Inf)
-    val members = Await.result(membersF, Duration.Inf)
-    val sigs = Await.result(sigsF, Duration.Inf)
-    val textHash = Await.result(textHashF, Duration.Inf)
-    PipelineStore(y5, members, cents, vocab, carry, sigs, contamDrop,
-      quant, textHash, vocabPieces)
+    val (vocab, pieces, packCarry) = Await.result(vocabF, Duration.Inf)
+    PipelineStore(docs, Await.result(membersF, Duration.Inf), cents,
+      vocab, packCarry, Await.result(sigsF, Duration.Inf), contamDrop,
+      quant, Await.result(textHashF, Duration.Inf), pieces)
+  }
+
+  /** Exact dedup of a gated day `d1` against the store: first arrival
+    * within the day, minus every doc whose text the store already
+    * holds. Membership is decided on the store's 8-byte text-hash
+    * artifact, so the store's text is never shuffled; it is fetched
+    * only for the matched hashes (today's true duplicates plus ~0
+    * collisions), and the final text equi-join keeps the answer EXACT
+    * — an xxhash64 collision costs one candidate row, never a wrong
+    * result. */
+  private[graft] def exactVsStore(store: PipelineStore,
+      d1: DataFrame): DataFrame = {
+    val d1Th = d1.select(xxhash64(col("text")).as("th")).distinct()
+    val hitTh = store.textHash.join(d1Th, Seq("th"), "semi")
+    val storeTexts = store.docs
+      .join(hitTh, xxhash64(col("text")) === col("th"), "semi")
+      .select("text")
+    d1.join(exactKeepers(d1), Seq("doc_id"), "semi")
+      .join(d1.join(storeTexts, Seq("text"), "semi").select("doc_id"),
+        Seq("doc_id"), "left_anti")
   }
 
   /** One delta day against a frozen [[PipelineStore]]: gate →
@@ -4867,33 +4938,10 @@ object SparkEntry {
   private[graft] def pipelineDeltaDay(store: PipelineStore,
       dDocs: DataFrame): PipelineDeltaDay = {
     val d1 = pipelineGate(dDocs).localCheckpoint()
-    // round-17 (guide §3.2/§6): exact-vs-store decides MEMBERSHIP on
-    // the 8-byte text-hash artifact — the store side of the probe
-    // reads store.textHash, not the corpus text (the old semi join
-    // shuffled the store's full text by hash(text) every delta day).
-    // The store's text is then fetched only for the MATCHED hashes (a
-    // map-only scan of the checkpointed docs under the hit-hash
-    // filter — candidate-sized: today's true duplicates plus ~0
-    // collisions), and the final text equi-join keeps the answer
-    // EXACT — an xxhash64 collision costs one candidate row, never a
-    // wrong result.
-    val d1Th = d1.select(xxhash64(col("text")).as("th")).distinct()
-    val hitTh = store.textHash.join(d1Th, Seq("th"), "semi")
-    val storeTexts = store.docs
-      .join(hitTh, xxhash64(col("text")) === col("th"), "semi")
-      .select("text")
-    val exactVsStore = d1.join(storeTexts, Seq("text"), "semi")
-      .select("doc_id")
-    val dKeepers = Dedup.exact(d1, col("text"), col("doc_id"))
-      .select(col("keeper_id").as("doc_id"))
-    val d2 = d1.join(dKeepers, Seq("doc_id"), "semi")
-      .join(exactVsStore, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // round-16 sign-once: the delta batch is tokenized+signed EXACTLY
-    // once; the checkpointed frame drives both near-dup passes (vs
-    // the store artifact and within the delta) and, sliced to the
-    // kept docs below, becomes the day's absorbed signature rows —
-    // the old shape signed d2 twice and re-signed d5
+    val d2 = exactVsStore(store, d1).localCheckpoint()
+    // sign once: the checkpointed frame drives both near-dup passes
+    // (vs the store artifact and within the delta) and, sliced to the
+    // kept docs below, becomes the day's absorbed signature rows
     val sigD2 = MinHashLSH.portableSignatureStore(d2, "doc_id", "text")
       .localCheckpoint()
     val d3 = d2.join(MinHashLSH.deltaNearDropIdsFromSig(store.sigs,
@@ -4915,29 +4963,20 @@ object SparkEntry {
         Similarity.intDot(col("q"), col("q")).as("nb"))
       x.join(y, Seq("c"))
         .withColumn("idot", Similarity.intDot(col("qa"), col("qb")))
-        .filter(Similarity.cosineAtLeast(3, 10))
+        .filter(Similarity.cosineAtLeast(SemCosNum, SemCosDen))
         .select(col("b").as("doc_id")).distinct()
     }
-    val deltaSem = Similarity.semanticDupEdges(dAssigned, 3, 10)
-      .select(col("b").as("doc_id")).distinct()
-    val d4 = d3.join(crossSem.union(deltaSem).distinct(),
+    val d4 = d3.join(crossSem.union(semanticDupIds(dAssigned)).distinct(),
         Seq("doc_id"), "left_anti")
-      .localCheckpoint() // round-16: read by d5 AND the depth ledger
+      .localCheckpoint() // read by d5 AND the depth ledger
     val d5 = d4.join(store.contamDrop, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    val dTok = docTokenFrame(d5,
-      UnigramSegment.greedySegmentPieces(d5, "text", store.vocabPieces)
-        .select(col("word"), col("n_pieces").cast("long").as("np")))
-    val dPacked = Curation.packSequencesContinued(dTok, "doc_id",
-      "n_tokens", "source", capacity = 256L, store.carry)
+    val dPacked = Curation.packSequencesContinued(
+        docTokens(d5, store.vocabPieces), "doc_id", "n_tokens", "source",
+        capacity = PackTokens, store.carry)
       .localCheckpoint()
-    // round-16 ledger (guide §2.4): the five stage sets are NESTED
-    // (d5 ⊆ d4 ⊆ … ⊆ d1 ⊆ dDocs), so the disposition is a pure
-    // function of the DEEPEST set containing the doc — a tagged union
-    // + one groupBy(doc_id) replaces six left joins (one exchange
-    // instead of a 6-join SMJ chain; the pack address rides the same
-    // aggregation as the packed row's max). Row-for-row identical to
-    // the join form.
+    // the five stage sets are NESTED (d5 ⊆ d4 ⊆ … ⊆ d1 ⊆ dDocs), so
+    // the disposition is the DEEPEST set containing the doc
     val ledger = stageDepthLedger(dDocs,
       Seq(d1, d2, d3, d4, d5), dPacked)
     val keptMembers = dAssigned
@@ -5033,12 +5072,27 @@ object SparkEntry {
         col("source"))
       .localCheckpoint()
 
-  private def qPipelineDelta(s: SparkSession, dir: String): DataFrame = {
+  /** The crawl fixture's day split: day d holds the docs with
+    * doc_id % 7 == d, and the store corpus holds the docs of no day in
+    * `days`. Returns (store corpus, day frames in `days` order). */
+  private[graft] def daySplit(docs: DataFrame,
+      days: Seq[Int]): (DataFrame, Seq[DataFrame]) =
+    (docs.filter(days.map(d => col("doc_id") % 7 =!= d).reduce(_ && _)),
+      days.map(d => docs.filter(col("doc_id") % 7 === d)))
+
+  /** The store-chain queries' prelude: the store built over the
+    * [[daySplit]] store corpus (benchmark flags over every doc), and
+    * the day frames in `days` order. */
+  private def pipelineDays(s: SparkSession, dir: String,
+      days: Int*): (PipelineStore, Seq[DataFrame]) = {
     val docs = pipelineDocs(s, dir)
-    val store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    pipelineDeltaDay(store, docs.filter(col("doc_id") % 7 === 3))
-      .ledger.orderBy("doc_id")
+    val (storeDocs, dayDocs) = daySplit(docs, days)
+    (buildPipelineStore(s, dir, storeDocs, docs), dayDocs)
+  }
+
+  private def qPipelineDelta(s: SparkSession, dir: String): DataFrame = {
+    val (store, Seq(day)) = pipelineDays(s, dir, 3)
+    pipelineDeltaDay(store, day).ledger.orderBy("doc_id")
   }
 
   /** Round-15: the K-DAY incremental loop (K = 2) — q370 proves one
@@ -5056,15 +5110,10 @@ object SparkEntry {
     * winners) is spec-pinned over random id-ordered day splits
     * (Round15Spec). */
   private def qPipelineTwoDay(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
+    val (store0, Seq(docs1, docs2)) = pipelineDays(s, dir, 2, 3)
+    val day1 = pipelineDeltaDay(store0, docs1)
     val store1 = absorbPipelineDay(store0, day1)
-    val day2 = pipelineDeltaDay(store1,
-      docs.filter(col("doc_id") % 7 === 3))
+    val day2 = pipelineDeltaDay(store1, docs2)
     day1.ledger.withColumn("day", lit(1L))
       .unionByName(day2.ledger.withColumn("day", lit(2L)))
       .select("doc_id", "day", "disposition", "seq_id", "seq_offset")
@@ -5079,24 +5128,9 @@ object SparkEntry {
     * from text — the two paths are bit-equal by the artifact
     * contract, additionally spec-pinned on random corpora). */
   private def qSigStoreCross(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val d1 = pipelineGate(docs.filter(col("doc_id") % 7 === 3))
-    // round-17: same text-hash-artifact membership probe as
-    // [[pipelineDeltaDay]] (store side reads textHash, text fetched
-    // for matched hashes only, final text equi-join keeps it exact)
-    val d1Th = d1.select(xxhash64(col("text")).as("th")).distinct()
-    val hitTh = store.textHash.join(d1Th, Seq("th"), "semi")
-    val storeTexts = store.docs
-      .join(hitTh, xxhash64(col("text")) === col("th"), "semi")
-      .select("text")
-    val d2 = d1.join(Dedup.exact(d1, col("text"), col("doc_id"))
-        .select(col("keeper_id").as("doc_id")), Seq("doc_id"), "semi")
-      .join(d1.join(storeTexts, Seq("text"), "semi")
-        .select("doc_id"), Seq("doc_id"), "left_anti")
-    MinHashLSH.crossNearDuplicatesFromStore(store.sigs, store.docs, d2,
-        "doc_id", "text")
+    val (store, Seq(day)) = pipelineDays(s, dir, 3)
+    MinHashLSH.crossNearDuplicatesFromStore(store.sigs, store.docs,
+        exactVsStore(store, pipelineGate(day)), "doc_id", "text")
       .select(col("b_id"), col("s_id"), col("inter"), col("uni"))
       .orderBy("b_id", "s_id")
   }
@@ -5317,11 +5351,8 @@ object SparkEntry {
     * (reconciliation algebra spec-pinned via the pack continuation
     * property). */
   private def qManifestDelta(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val day = pipelineDeltaDay(store,
-      docs.filter(col("doc_id") % 7 === 3))
+    val (store, Seq(dayDocs)) = pipelineDays(s, dir, 3)
+    val day = pipelineDeltaDay(store, dayDocs)
     val agg = day.packed.groupBy("source", "seq_id")
       .agg(count(lit(1)).as("n_docs_add"),
         sum(col("len")).as("n_tokens_add"))
@@ -5335,6 +5366,12 @@ object SparkEntry {
       .orderBy("source", "seq_id")
   }
 
+  /** A day's quota offer: its packed docs with their token counts,
+    * tagged with the day they were offered. */
+  private def dayOffer(day: PipelineDeltaDay, d: Long): DataFrame =
+    day.packed.select(col("source"), col("doc_id"),
+      col("len").as("n_tokens"), lit(d).as("offered_day"))
+
   /** Round-15: QUOTA-admission audit — the data-mixing knob applied
     * to the absorb loop: the day's kept docs are offered per source
     * in id order and admitted while the cumulative token mass stays
@@ -5345,15 +5382,10 @@ object SparkEntry {
     * is spec-pinned at the operator level). Output: one row per
     * offered doc with its cumulative position and verdict. */
   private def qQuotaAdmit(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val day = pipelineDeltaDay(store,
-      docs.filter(col("doc_id") % 7 === 3))
+    val (store, Seq(dayDocs)) = pipelineDays(s, dir, 3)
+    val day = pipelineDeltaDay(store, dayDocs)
     val offered = day.packed.select(col("source"), col("doc_id"),
       col("len").as("n_tokens"))
-    // round-17: half-of-offer budgets ride the admission window's own
-    // exchange (no separate groupBy + broadcast join)
     Curation.quotaAdmitHalfPending(offered, Seq("doc_id"), "n_tokens",
         "source")
       .select("source", "doc_id", "n_tokens", "cum_before", "admitted")
@@ -5373,36 +5405,25 @@ object SparkEntry {
     * admitted_day = −1 for docs still backlogged after day 2. Token
     * counts are frozen-vocab counts from the doc's own kept day. */
   private def qQuotaTwoDay(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
+    val (store0, Seq(docs1, docs2)) = pipelineDays(s, dir, 2, 3)
+    val day1 = pipelineDeltaDay(store0, docs1)
     // round-17 (guide §2.6): absorb ∥ day 1's admission (disjoint
     // inputs; day 2's chain awaits the absorbed store)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val store1F = Future { absorbPipelineDay(store0, day1) }
-    def offer(day: PipelineDeltaDay, d: Long): DataFrame =
-      day.packed.select(col("source"), col("doc_id"),
-        col("len").as("n_tokens"), lit(d).as("offered_day"))
-    val off1 = offer(day1, 1L).localCheckpoint()
-    // round-17: half-of-pending budgets ride the admission window
-    // (quotaAdmitHalfPending) — one exchange per day instead of
-    // window + groupBy + broadcast join
+    val off1 = dayOffer(day1, 1L).localCheckpoint()
     val adm1 = Curation.quotaAdmitHalfPending(off1, Seq("doc_id"),
       "n_tokens", "source").localCheckpoint()
     val store1 = Await.result(store1F, Duration.Inf)
-    val day2 = pipelineDeltaDay(store1,
-      docs.filter(col("doc_id") % 7 === 3))
+    val day2 = pipelineDeltaDay(store1, docs2)
     val backlog = adm1.filter(!col("admitted"))
       .select("source", "doc_id", "n_tokens", "offered_day")
     // FIFO priority = (offered_day, doc_id) as the admission window's
     // own two-column sort — a packed `day * 10^12 + id` key would
     // silently invert the order once doc_id crosses 10^12
-    val off2 = backlog.unionByName(offer(day2, 2L)).localCheckpoint()
+    val off2 = backlog.unionByName(dayOffer(day2, 2L)).localCheckpoint()
     val adm2 = Curation.quotaAdmitHalfPending(off2,
       Seq("offered_day", "doc_id"), "n_tokens", "source")
     adm1.filter(col("admitted"))
@@ -5533,19 +5554,34 @@ object SparkEntry {
     * actually buys. Probe side broadcast; corpus-sized lists never
     * move (the searchPortable stance). */
   private def qServingRefresh(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val day = pipelineDeltaDay(store,
-      docs.filter(col("doc_id") % 7 === 3))
-    val lists = store.members.unionByName(day.keptMembers)
-      .select(col("id").as("cid"), col("q").as("cq"), col("cluster_id"))
-    val probes0 = store.quant.filter(col("id") % 20 === 0)
+    val (store, Seq(dayDocs)) = pipelineDays(s, dir, 3)
+    val day = pipelineDeltaDay(store, dayDocs)
+    ivfTop5(evalProbes(store.quant),
+        store.members.unionByName(day.keptMembers), store.cents)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("idot"), (col("neighbor_id") % 7 === 3).as("from_delta"))
+      .orderBy("query_id", "rank")
+  }
+
+  /** The q176 eval-set probes: every 20th vector as (qid, qq). */
+  private def evalProbes(quant: DataFrame): DataFrame =
+    quant.filter(col("id") % 20 === 0)
       .select(col("id").as("qid"), col("q").as("qq"))
+
+  /** IVF top-5 search at nProbe = 2: each probe ranks the frozen
+    * centroids by exact integer d2 (ties by cluster id), scans the
+    * member lists of its two nearest, and keeps the five members of
+    * highest integer dot product (ties by id), itself excluded.
+    * Probes are broadcast; the corpus-sized lists never move.
+    * Output: (query_id, rank, neighbor_id, idot). */
+  private def ivfTop5(probes: DataFrame, members: DataFrame,
+      cents: DataFrame): DataFrame = {
+    val lists = members.select(col("id").as("cid"), col("q").as("cq"),
+      col("cluster_id"))
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("d2").asc, col("cluster_id").asc)
-    val probes = probes0.crossJoin(broadcast(store.cents))
+    val nearest = probes.crossJoin(broadcast(cents))
       .withColumn("d2",
         org.apache.spark.sql.graft.GraftFunctions.intDist2(
           col("qq"), col("c")))
@@ -5555,15 +5591,13 @@ object SparkEntry {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("idot").desc, col("neighbor_id").asc)
-    lists.join(broadcast(probes), Seq("cluster_id"))
+    lists.join(broadcast(nearest), Seq("cluster_id"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
         Similarity.intDot(col("qq"), col("cq")).as("idot"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("idot"), (col("neighbor_id") % 7 === 3).as("from_delta"))
-      .orderBy("query_id", "rank")
+      .select("query_id", "rank", "neighbor_id", "idot")
   }
 
   /** Round-15: the RETRAIN TRIGGER read at the absorb boundary — the
@@ -5578,39 +5612,18 @@ object SparkEntry {
     * broadcast-centroid assignment per side; the audit is |clusters|
     * rows. */
   private def qAbsorbDrift(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
-    val yV = store0.quant.join(
-      store0.docs.select(col("doc_id").as("id")), Seq("id"))
-    val dV = store0.quant.join(
-      day1.kept.select(col("doc_id").as("id")), Seq("id"))
-    def dec(c: Column) = c.cast("decimal(19,0)")
-    val ya = IvfIndex.assignPortableInlinedWithDist(yV, store0.cents)
-      .groupBy("cluster_id")
-      .agg(sum(col("d2")).as("sum_y"), count(lit(1)).as("n_y"))
-    val da = IvfIndex.assignPortableInlinedWithDist(dV, store0.cents)
-      .groupBy("cluster_id")
-      .agg(sum(col("d2")).as("sum_d"), count(lit(1)).as("n_d"))
-    store0.cents.select(col("cluster_id"))
-      .join(ya, Seq("cluster_id"), "left")
-      .join(da, Seq("cluster_id"), "left")
-      .select(col("cluster_id"),
-        coalesce(col("n_y"), lit(0L)).as("n_store"),
-        coalesce(col("n_d"), lit(0L)).as("n_absorbed"),
-        expr("coalesce(sum_y, 0L) div greatest(coalesce(n_y, 0L), 1L)")
-          .as("mean_d2_store"),
-        expr("coalesce(sum_d, 0L) div greatest(coalesce(n_d, 0L), 1L)")
-          .as("mean_d2_absorbed"),
-        (dec(coalesce(col("sum_d"), lit(0L))) *
-            dec(coalesce(col("n_y"), lit(0L))) * lit(4) >
-          dec(coalesce(col("sum_y"), lit(0L))) *
-            dec(coalesce(col("n_d"), lit(0L))) * lit(5)).as("retrain"))
+    val (store0, Seq(docs1, _)) = pipelineDays(s, dir, 2, 3)
+    absorbDrift(store0, pipelineDeltaDay(store0, docs1).kept)
       .orderBy("cluster_id")
   }
+
+  /** [[driftByCluster]] of the day's `kept` vectors against the store's
+    * curated members, under the store's frozen centroids. */
+  private def absorbDrift(st: PipelineStore, kept: DataFrame): DataFrame =
+    driftByCluster(
+      st.quant.join(st.docs.select(col("doc_id").as("id")), Seq("id")),
+      st.quant.join(kept.select(col("doc_id").as("id")), Seq("id")),
+      st.cents, "store", "absorbed")
 
   /** Round-16: the RETRAIN arm of the nightly loop — what q378/q381
     * only DECIDE, executed. The store is re-entered through
@@ -5631,49 +5644,9 @@ object SparkEntry {
     * vocab, members, signatures) is spec-pinned. */
   private[graft] def retrainPipelineStore(s: SparkSession,
       store: PipelineStore): PipelineStore = {
-    val vecs = store.quant
-      .join(store.docs.select(col("doc_id").as("id")), Seq("id"))
-      .localCheckpoint() // round-16: Lloyd re-reads this 4×
-    val cents = IvfIndex.trainPortable(s, vecs, k = 8, iters = 2)
-      .localCheckpoint()
-    val assigned = IvfIndex.assignPortableInlined(vecs, cents)
-      .localCheckpoint()
-    val drop = Similarity.semanticDupEdges(assigned, 3, 10)
-      .select(col("b").as("doc_id")).distinct()
-    val docs = store.docs.join(drop, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // round-17 (guide §2.6): the four refrozen artifacts branch
-    // independently off the survivor checkpoint — materialize them
-    // concurrently (the build-time shape)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val vocabF = Future {
-      val vocab = UnigramSegment.pieceVocab(docs, "text")
-        .localCheckpoint()
-      (vocab, UnigramSegment.collectPieces(vocab))
-    }
-    val membersF = Future {
-      assigned.join(docs.select(col("doc_id").as("id")), Seq("id"))
-        .localCheckpoint()
-    }
-    val sigsF = Future {
-      store.sigs.join(docs.select("doc_id"), Seq("doc_id"), "semi")
-        .localCheckpoint()
-    }
-    // the re-screen can EVICT docs, so the exact-dup artifact is
-    // recomputed as a map-only projection of the new survivor
-    // checkpoint (hashes carry no doc id to slice by; retrain is the
-    // rare arm)
-    val textHashF = Future {
-      docs.select(xxhash64(col("text")).as("th")).localCheckpoint()
-    }
-    val (vocab, vocabPieces) = Await.result(vocabF, Duration.Inf)
-    store.copy(docs = docs, members = Await.result(membersF, Duration.Inf),
-      cents = cents, vocab = vocab,
-      sigs = Await.result(sigsF, Duration.Inf),
-      textHash = Await.result(textHashF, Duration.Inf),
-      vocabPieces = vocabPieces)
+    val (cents, assigned, kept) = semanticStage(s, store.quant, store.docs)
+    freezeStore(kept.localCheckpoint(), assigned, store.sigs, cents,
+      store.contamDrop, store.quant, _ => store.carry)
   }
 
   /** Round-16 (q385): RETRAIN vs FREEZE, measured — the absorbed
@@ -5691,12 +5664,8 @@ object SparkEntry {
     * the Lloyd retrain itself is the q351 training path (k seed
     * vectors to the driver once, then map-side partial means). */
   private def qRetrainRefreeze(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val day = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 3))
-    val store1 = absorbPipelineDay(store0, day)
+    val (store0, Seq(dayDocs)) = pipelineDays(s, dir, 3)
+    val store1 = absorbPipelineDay(store0, pipelineDeltaDay(store0, dayDocs))
     // round-17 (guide §2.6): the retrain is independent of the frozen
     // assignment pass — overlap them (vecs checkpoints first: both
     // passes read it)
@@ -5755,48 +5724,18 @@ object SparkEntry {
     * corpus-sized lists never move) + one k-bounded overlap join on
     * (probe, neighbor). */
   private def qRetrainServing(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
-    val day = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 3))
-    val store1 = absorbPipelineDay(store0, day)
+    val (store0, Seq(dayDocs)) = pipelineDays(s, dir, 3)
+    val store1 = absorbPipelineDay(store0, pipelineDeltaDay(store0, dayDocs))
     // round-17 (guide §2.6): retrain ∥ the frozen-geometry search —
     // r is only needed for the retrained arm below
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val rF = Future { retrainPipelineStore(s, store1) }
-    val probes0 = store1.quant.filter(col("id") % 20 === 0)
-      .select(col("id").as("qid"), col("q").as("qq")).localCheckpoint()
-    def top5(members: DataFrame, cents: DataFrame): DataFrame = {
-      val lists = members.select(col("id").as("cid"),
-        col("q").as("cq"), col("cluster_id"))
-      val wq = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid"))
-        .orderBy(col("d2").asc, col("cluster_id").asc)
-      val probes = probes0.crossJoin(broadcast(cents))
-        .withColumn("d2",
-          org.apache.spark.sql.graft.GraftFunctions.intDist2(
-            col("qq"), col("c")))
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 2)
-        .select(col("qid"), col("qq"), col("cluster_id"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("idot").desc, col("neighbor_id").asc)
-      lists.join(broadcast(probes), Seq("cluster_id"))
-        .filter(col("qid") =!= col("cid"))
-        .select(col("qid").as("query_id"),
-          col("cid").as("neighbor_id"),
-          Similarity.intDot(col("qq"), col("cq")).as("idot"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select("query_id", "rank", "neighbor_id")
-    }
-    val f5 = top5(store1.members, store1.cents).localCheckpoint()
+    val probes0 = evalProbes(store1.quant).localCheckpoint()
+    val f5 = ivfTop5(probes0, store1.members, store1.cents).localCheckpoint()
     val r = Await.result(rF, Duration.Inf)
-    val r5 = top5(r.members, r.cents).localCheckpoint()
+    val r5 = ivfTop5(probes0, r.members, r.cents).localCheckpoint()
     val ov = f5.select("query_id", "neighbor_id")
       .join(r5.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"))
@@ -5841,14 +5780,8 @@ object SparkEntry {
     * (retrain retains pack history: shipped sequences are physical).
     */
   private def qRefreezeLoop(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
-    val store1 = absorbPipelineDay(store0, day1)
-    val day2 = docs.filter(col("doc_id") % 7 === 3)
+    val (store0, Seq(docs1, day2)) = pipelineDays(s, dir, 2, 3)
+    val store1 = absorbPipelineDay(store0, pipelineDeltaDay(store0, docs1))
     // round-17 (guide §2.6): the FROZEN arm's delta day is independent
     // of the retrain — run it concurrently with retrain+refrozen arm
     // (each arm materializes exactly its sequential frames)
@@ -5893,14 +5826,8 @@ object SparkEntry {
     * Same DAG as q392 (chain + retrain + two delta days); the
     * readout is three |sources|-row aggregates. */
   private def qRefreezeRepack(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    val store0 = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
-    val store1 = absorbPipelineDay(store0, day1)
-    val day2 = docs.filter(col("doc_id") % 7 === 3)
+    val (store0, Seq(docs1, day2)) = pipelineDays(s, dir, 2, 3)
+    val store1 = absorbPipelineDay(store0, pipelineDeltaDay(store0, docs1))
     def agg(p: DataFrame, tag: String): DataFrame =
       p.groupBy("source").agg(
         count(lit(1)).as(s"nd_$tag"),
@@ -5933,6 +5860,19 @@ object SparkEntry {
       .orderBy("source")
   }
 
+  /** The loader-manifest columns of packed sequences on the ring
+    * placement `shardCol`: the 1-based read rank in (source, seq_id)
+    * order within the shard and the token offset where the sequence
+    * starts, suffixed `_<suffix>`. */
+  private def manifest(shardCol: String, suffix: String): Seq[Column] = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(shardCol).orderBy("source", "seq_id")
+    Seq(row_number().over(w).cast("long").as(s"seq_rank_$suffix"),
+      coalesce(sum(col("n_tokens")).over(w.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        -1)), lit(0L)).as(s"token_offset_$suffix"))
+  }
+
   /** Round-16 (q386): RING-CHANGE manifest migration — q379 pins the
     * manifest under a DATA delta; this pins it under a FLEET change.
     * The packed sequences are placed on the loader ring BEFORE
@@ -5957,14 +5897,6 @@ object SparkEntry {
       operators.HashRing.assign(seqs, "k", nShards = 16,
         vnodesPerShard = 32, shardCol = "shard_before"),
       "k", nShards = 20, vnodesPerShard = 32, shardCol = "shard_after")
-    def manifest(shardCol: String, suffix: String) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(shardCol).orderBy("source", "seq_id")
-      Seq(row_number().over(w).cast("long").as(s"seq_rank_$suffix"),
-        coalesce(sum(col("n_tokens")).over(w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          -1)), lit(0L)).as(s"token_offset_$suffix"))
-    }
     both
       .select(Seq(col("shard_before"), col("shard_after"),
         col("source"), col("seq_id"), col("n_docs"),
@@ -6000,14 +5932,6 @@ object SparkEntry {
       .withColumn("k", org.apache.spark.sql.graft.CharFoldHash
         .column(concat(col("source"), lit(":"), col("seq_id"))))
       .localCheckpoint()
-    def manifest(shardCol: String, suffix: String) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(shardCol).orderBy("source", "seq_id")
-      Seq(row_number().over(w).cast("long").as(s"seq_rank_$suffix"),
-        coalesce(sum(col("n_tokens")).over(w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          -1)), lit(0L)).as(s"token_offset_$suffix"))
-    }
     def scen(name: String, after: Seq[Int]): DataFrame =
       operators.HashRing.assignWeighted(
         operators.HashRing.assignWeighted(seqs, "k", q361Capacities,
@@ -6048,11 +5972,9 @@ object SparkEntry {
     * order, per-day backlog conservation) are scalacheck-pinned in
     * Round16Spec. */
   private def qQuotaStarvation(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
     val k = 3L
-    var store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 1 && col("doc_id") % 7 =!= 2
-        && col("doc_id") % 7 =!= 3), docs)
+    val (store0, days) = pipelineDays(s, dir, 1, 2, 3)
+    var store = store0
     var backlog: DataFrame = null
     var lastAdm: DataFrame = null
     var admitted: Seq[DataFrame] = Seq.empty
@@ -6062,18 +5984,15 @@ object SparkEntry {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    (1L to k).foreach { d =>
-      val day = pipelineDeltaDay(store,
-        docs.filter(col("doc_id") % 7 === d))
+    (1L to k).zip(days).foreach { case (d, dayDocs) =>
+      val day = pipelineDeltaDay(store, dayDocs)
       val prevStore = store
       val storeF = Future { absorbPipelineDay(prevStore, day) }
-      val fresh = day.packed.select(col("source"), col("doc_id"),
-        col("len").as("n_tokens"), lit(d).as("offered_day"))
+      val fresh = dayOffer(day, d)
       val pending = (if (backlog == null) fresh
         else backlog.unionByName(fresh)).localCheckpoint()
-      // round-17: half-of-pending budgets ride the admission window
-      // (one exchange/day; the budget column comes back on every row,
-      // so the final-day blocked check needs no budget re-join)
+      // the budget column comes back on every row, so the final-day
+      // blocked check needs no budget re-join
       val adm = Curation.quotaAdmitHalfPending(pending,
           Seq("offered_day", "doc_id"), "n_tokens", "source")
         .localCheckpoint()
@@ -6091,8 +6010,7 @@ object SparkEntry {
         (col("admitted_day") - col("offered_day")).as("wait_days"),
         lit(false).as("starved"), lit(false).as("blocked"))
     // a backlogged doc's stratum is IN the pending frame (the doc
-    // itself pends), so its window budget always exists — the old
-    // left-join's missing-stratum sentinel could never fire
+    // itself pends), so its window budget always exists
     val rest = lastAdm.filter(!col("admitted"))
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("offered_day"), lit(-1L).as("admitted_day"),
@@ -6123,25 +6041,20 @@ object SparkEntry {
     * |sources|-row frame threaded through the K-day driver fold,
     * exactly like the pack carry. */
   private def qQuotaCarryover(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
     val k = 3
-    var store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 1 && col("doc_id") % 7 =!= 2
-        && col("doc_id") % 7 =!= 3), docs)
+    val (store0, days) = pipelineDays(s, dir, 1, 2, 3)
+    var store = store0
     var offers: Seq[DataFrame] = Seq.empty
     // round-17 (guide §2.6): absorb ∥ the day's offer checkpoint
     // (disjoint inputs; the next day's chain awaits the store)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    (1 to k).foreach { d =>
-      val day = pipelineDeltaDay(store,
-        docs.filter(col("doc_id") % 7 === d))
+    (1 to k).zip(days).foreach { case (d, dayDocs) =>
+      val day = pipelineDeltaDay(store, dayDocs)
       val prevStore = store
       val storeF = Future { absorbPipelineDay(prevStore, day) }
-      offers :+= day.packed.select(col("source"), col("doc_id"),
-          col("len").as("n_tokens"), lit(d.toLong).as("offered_day"))
-        .localCheckpoint()
+      offers :+= dayOffer(day, d.toLong).localCheckpoint()
       store = Await.result(storeF, Duration.Inf)
     }
     val spine = offers.reduce(_ unionByName _).groupBy("source")
@@ -6155,10 +6068,8 @@ object SparkEntry {
         val fresh = offers(d - 1)
         val pending = (if (backlog == null) fresh
           else backlog.unionByName(fresh)).localCheckpoint()
-        // round-17: half-of-pending base budgets ride the admission
-        // window; the carryover policy adds yesterday's unspent as
-        // the |sources|-row extraBudget frame (missing stratum = +0,
-        // exactly the old left-join coalesce)
+        // the carryover policy adds yesterday's unspent as the
+        // |sources|-row extraBudget frame (missing stratum = +0)
         val adm = Curation.quotaAdmitHalfPending(pending,
             Seq("offered_day", "doc_id"), "n_tokens", "source",
             if (!carryover || unspent == null) None
@@ -6185,8 +6096,7 @@ object SparkEntry {
           sum(col("n_tokens")).as("tok_admitted"),
           sum(col("admitted_day") - col("offered_day")).as("_wa"))
       // a backlogged doc's stratum budget is on its own adm row (the
-      // old broadcast lastBud join's missing-stratum sentinel could
-      // never fire — the doc itself was pending)
+      // doc itself is pending)
       val backAgg = lastAdm.filter(!col("admitted"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_backlog"),
@@ -6297,21 +6207,15 @@ object SparkEntry {
     * shape: unchanged from q373/q387 — the round trip adds one
     * map-only write and one pruned scan per artifact, no shuffle. */
   private def qStoreRestart(s: SparkSession, dir: String): DataFrame = {
-    val docs = pipelineDocs(s, dir)
-    var store = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 1 && col("doc_id") % 7 =!= 2
-        && col("doc_id") % 7 =!= 3), docs)
-    (1 to 2).foreach { d =>
-      val day = pipelineDeltaDay(store,
-        docs.filter(col("doc_id") % 7 === d))
-      store = absorbPipelineDay(store, day)
+    val (store0, Seq(docs1, docs2, docs3)) = pipelineDays(s, dir, 1, 2, 3)
+    val store = Seq(docs1, docs2).foldLeft(store0) { (st, dayDocs) =>
+      absorbPipelineDay(st, pipelineDeltaDay(st, dayDocs))
     }
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_store_rt").toString
     persistPipelineStore(store, tmp)
     val cold = loadPipelineStore(s, tmp, store.quant)
-    pipelineDeltaDay(cold, docs.filter(col("doc_id") % 7 === 3))
-      .ledger.orderBy("doc_id")
+    pipelineDeltaDay(cold, docs3).ledger.orderBy("doc_id")
   }
 
   /** Round-16 (q396): the NIGHTLY REPORT — the whole night as one
@@ -6370,14 +6274,10 @@ object SparkEntry {
     * trigger aggregate per night and the 1-row decision collect. */
   private def qNightlyLoop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = pipelineDocs(s, dir)
-    val base = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 2 && col("doc_id") % 7 =!= 3),
-      docs)
+    val (base, Seq(docs1, docs2)) = pipelineDays(s, dir, 2, 3)
     val store0 = base.copy(quant =
       scaleDayQuant(base.quant, 2L, 2).localCheckpoint())
-    val day1 = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 2))
+    val day1 = pipelineDeltaDay(store0, docs1)
     // round-17 (guide §2.6): the absorb and the drift trigger read
     // disjoint inputs (store0 ∪ day1.kept) — overlap them; night 2
     // needs the absorbed store on BOTH branches here, so the absorb
@@ -6393,8 +6293,7 @@ object SparkEntry {
     // night 1's report needs nothing from night 2 — collect it
     // concurrently with the whole night-2 chain (§2.6)
     val m1F = Future { nightMetrics(s, day1, fired1, re1, ev1) }
-    val day2 = pipelineDeltaDay(store2,
-      docs.filter(col("doc_id") % 7 === 3))
+    val day2 = pipelineDeltaDay(store2, docs2)
     val fired2 = driftTriggerFired(store2, day2.kept)
     val m2 = nightMetrics(s, day2, fired2, 0L, 0L)
     (Await.result(m1F, Duration.Inf)
@@ -6413,28 +6312,11 @@ object SparkEntry {
         transform(col("q"), x => x * lit(scale.toLong)))
         .otherwise(col("q")))
 
-  /** The q378 drift rule as the nightly's boolean: ANY cluster where
-    * the day's mean d2 under the frozen centroids exceeds 5/4 of the
-    * store members' (exact integer cross-multiply in decimal(19,0) —
-    * both sums fit a long by ANSI, so the cast is lossless). */
+  /** The q378 drift rule as the nightly's boolean: does ANY cluster of
+    * [[absorbDrift]]'s frame flag a retrain. */
   private def driftTriggerFired(st: PipelineStore,
-      kept: DataFrame): Boolean = {
-    def dec(c: Column) = c.cast("decimal(19,0)")
-    val yV = st.quant.join(st.docs.select(col("doc_id").as("id")),
-      Seq("id"))
-    val dV = st.quant.join(kept.select(col("doc_id").as("id")),
-      Seq("id"))
-    val ya = IvfIndex.assignPortableInlinedWithDist(yV, st.cents)
-      .groupBy("cluster_id")
-      .agg(sum(col("d2")).as("sum_y"), count(lit(1)).as("n_y"))
-    val da = IvfIndex.assignPortableInlinedWithDist(dV, st.cents)
-      .groupBy("cluster_id")
-      .agg(sum(col("d2")).as("sum_d"), count(lit(1)).as("n_d"))
-    ya.join(da, Seq("cluster_id"))
-      .filter(dec(col("sum_d")) * dec(col("n_y")) * lit(4) >
-        dec(col("sum_y")) * dec(col("n_d")) * lit(5))
-      .limit(1).count() > 0
-  }
+      kept: DataFrame): Boolean =
+    absorbDrift(st, kept).filter(col("retrain")).limit(1).count() > 0
 
   /** Execute the retrain and count what it changed: (retrained store,
     * members whose cluster moved, docs the re-screen evicted). */
@@ -6516,19 +6398,13 @@ object SparkEntry {
   private def nightlyReportFrom(s: SparkSession, dir: String,
       dayScale: Int): DataFrame = {
     import s.implicits._
-    val docs = pipelineDocs(s, dir)
-    val base = buildPipelineStore(s, dir,
-      docs.filter(col("doc_id") % 7 =!= 3), docs)
+    val (base, Seq(dayDocs)) = pipelineDays(s, dir, 3)
     val store0 = if (dayScale == 1) base
       else base.copy(quant =
         scaleDayQuant(base.quant, 3L, dayScale).localCheckpoint())
-    val day = pipelineDeltaDay(store0,
-      docs.filter(col("doc_id") % 7 === 3))
-    // round-17 (guide §1.2, don't compute what you throw away): the
-    // absorbed store feeds ONLY the retrain arm here — on a calm
-    // night (trigger not fired) the old shape still paid the full
-    // absorb's five checkpoints for a frame nothing read. Decide
-    // first, absorb only when the retrain actually runs.
+    val day = pipelineDeltaDay(store0, dayDocs)
+    // the absorbed store feeds ONLY the retrain arm here: decide
+    // first, absorb only when the retrain actually runs
     val fired = driftTriggerFired(store0, day.kept)
     val (nReassigned, nEvicted) =
       if (!fired) (0L, 0L)
